@@ -36,6 +36,16 @@ unchanged), written by doc_id semi-join — payload bytes move only once,
 at the final write; every funnel decision flows through doc_id sets.
 Prints one JSON line with the per-stage survivor counts (the same
 numbers the oracle-checked `curation_funnel` query emits).
+
+Counts come from the actions that already run, never from an extra
+count(): the default funnel is three Spark SQL actions (the eager
+input fill whose count is n_total, the MinHash bands fill, and the
+output write), and the other stage counts are DataFrame.observe
+metrics those actions report (operators/observed.py).  Each optional
+doc-set stage adds one eager localCheckpoint that reports its count; a
+run with any stage that reads the survivor set twice first cuts it with
+one more.  Payload-rewrite stats are observed on the write (or on the
+lineage cut that follows the rewrite).  --report adds the report write.
 """
 
 from __future__ import annotations
@@ -46,27 +56,52 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.observed import Observed
 from ..plans.driver_queries_dedup import _FUNNEL_JACCARD_MIN, curation_stages
 from ..sources.tables import TableIO
+
+
+# optional stages that read the survivor set on two branches
+_TWO_BRANCH_STAGES = (
+    "nb_quality", "quality_sample", "gopher_filter", "entropy_filter",
+    "max_mille_bits", "drop_mixed_lang", "drop_ppl_tail", "dsir_select",
+    "max_dup_block_pct", "char_budget_div", "lang_rebalance",
+    "c4_clean", "dedup_paragraphs", "cut_dup_spans",
+)
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     io = TableIO(spark)
     docs = io.read(args.input)
 
-    quality, surviving_exact, final = curation_stages(
+    stages = curation_stages(
         docs, jaccard_min=args.jaccard_min, cluster_reps=args.cluster_reps
     )
-    final = final.persist()  # feeds the count, the write, and the report
-
     summary = {
-        "n_total": docs.count(),
-        "n_quality": quality.count(),
-        "n_after_exact_dedup": surviving_exact.count(),
-        "n_curated": final.count(),
+        "n_total": stages.n_total,
         "jaccard_min": args.jaccard_min,
         "near_dup_policy": "cluster_reps" if args.cluster_reps else "pair_loser",
     }
+    # every other count is an observed metric, read after the write;
+    # `live` names the count of the latest survivor set (n_curated)
+    observed = list(stages.counts)
+    live = "n_curated"
+
+    def _observe(df, **metrics):
+        obs = Observed(df, **metrics)
+        observed.append(obs)
+        return obs.df
+
+    if any(
+        getattr(args, k) is not None and getattr(args, k) is not False
+        for k in _TWO_BRANCH_STAGES
+    ):
+        # the funnel's counts are observed inside its persisted sets, so
+        # the action that fills them must read `final` on one branch:
+        # this eager cut does, before a stage reads it on two
+        final = stages.final.localCheckpoint()
+    else:
+        final = stages.final.persist()
 
     def _stage(prev, new_final, key):
         """Advance the survivor set past one optional stage with an
@@ -78,9 +113,12 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         materializes the (tiny, doc_id-only) set in executor storage
         like persist() but TRUNCATES the logical plan — the same cut
         connected_components uses per pointer-jumping round.  A run
-        that must survive executor loss swaps in checkpoint(dir)."""
-        out = new_final.localCheckpoint()  # eager by default
-        summary[key] = out.count()
+        that must survive executor loss swaps in checkpoint(dir).
+        The checkpoint job is also the one that reports the stage
+        count, as an observed metric."""
+        nonlocal live
+        live = key
+        out = _observe(new_final, **{key: F.count(F.lit(1))}).localCheckpoint()
         prev.unpersist()
         return out
 
@@ -310,7 +348,6 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         )
 
     curated = docs.join(final, "doc_id", "left_semi")
-    n_live = final.count()  # running count across payload-rewrite stages
 
     n_rewrites = sum(
         [bool(args.c4_clean), bool(args.dedup_paragraphs),
@@ -334,8 +371,10 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         # or curly braces drop entirely.  n_chars tracks the new text.
         from ..plans.driver_queries_quality import c4_line_clean
 
-        c4 = c4_line_clean(curated)
-        summary["n_c4_dropped_docs"] = c4.where("is_dropped").count()
+        c4 = _observe(
+            c4_line_clean(curated),
+            n_c4_dropped_docs=F.sum(F.col("is_dropped").cast("long")),
+        )
         curated = (
             curated.drop("text", "n_chars")
             .join(
@@ -346,8 +385,6 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
             .withColumnRenamed("text_clean", "text")
             .select(*docs.columns)
         )
-        n_live -= summary["n_c4_dropped_docs"]
-        summary["n_after_c4"] = n_live
 
     if args.dedup_paragraphs:
         curated = _cut(curated)
@@ -357,13 +394,13 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         # nothing (pure boilerplate) drop entirely.
         from ..plans.driver_queries_mix import paragraph_dedup
 
-        pd = paragraph_dedup(curated)
-        stats = pd.agg(
-            F.sum("n_dup_paragraphs").alias("cut"),
-            F.sum((F.col("clean_text") == "").cast("long")).alias("emptied"),
-        ).collect()[0]
-        summary["n_dup_paragraphs_cut"] = int(stats["cut"] or 0)
-        summary["n_paragraph_emptied_docs"] = int(stats["emptied"] or 0)
+        pd = _observe(
+            paragraph_dedup(curated),
+            n_dup_paragraphs_cut=F.sum("n_dup_paragraphs"),
+            n_paragraph_emptied_docs=F.sum(
+                (F.col("clean_text") == "").cast("long")
+            ),
+        )
         curated = (
             curated.drop("text", "n_chars")
             .join(
@@ -376,8 +413,6 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
             .withColumnRenamed("clean_text", "text")
             .select(*docs.columns)
         )
-        n_live -= summary["n_paragraph_emptied_docs"]
-        summary["n_after_paragraph_dedup"] = n_live
 
     if args.cut_dup_spans:
         curated = _cut(curated)
@@ -389,13 +424,11 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         # single spaces (the span family's tokenization contract).
         from ..plans.driver_queries_mix import exact_substr_cut
 
-        cut = exact_substr_cut(curated, w=args.cut_span_w)
-        stats = cut.agg(
-            F.sum("n_cut").alias("tok_cut"),
-            F.sum((F.col("n_kept") == 0).cast("long")).alias("full"),
-        ).collect()[0]
-        summary["n_tokens_cut"] = int(stats["tok_cut"] or 0)
-        summary["n_fully_cut_docs"] = int(stats["full"] or 0)
+        cut = _observe(
+            exact_substr_cut(curated, w=args.cut_span_w),
+            n_tokens_cut=F.sum("n_cut"),
+            n_fully_cut_docs=F.sum((F.col("n_kept") == 0).cast("long")),
+        )
         curated = (
             curated.drop("text", "n_chars")
             .join(cut.where(F.col("n_kept") > 0), "doc_id")
@@ -403,8 +436,6 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
             .withColumnRenamed("text_clean", "text")
             .select(*docs.columns)
         )
-        n_live -= summary["n_fully_cut_docs"]
-        summary["n_after_span_cut"] = n_live
 
     if args.encoding_clean:
         # encoding scrub (before the PII scrub, which stays last): strip
@@ -415,13 +446,12 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
             scrub_encoding,
         )
 
-        summary["n_encoding_artifacts_scrubbed"] = int(
-            curated.agg(
-                F.sum(count_encoding_artifacts(F.col("text"))).alias("n")
-            ).collect()[0]["n"]
-            or 0
-        )
-        curated = curated.withColumn(
+        curated = _observe(
+            curated,
+            n_encoding_artifacts_scrubbed=F.sum(
+                count_encoding_artifacts(F.col("text"))
+            ),
+        ).withColumn(
             "text", scrub_encoding(F.col("text"))
         ).withColumn("n_chars", F.length("text").cast("long"))
 
@@ -429,7 +459,7 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         # PII scrub (always the LAST rewrite: earlier rewrites must not
         # resurrect scrubbed spans).  A pure stateless projection — no
         # join, no doc drops, so no lineage cut is needed; the match
-        # counter is one cheap aggregate over the same JVM regexes.
+        # counter is an observed aggregate over the same JVM regexes.
         from ..plans.driver_queries_corpus import (
             _CC,
             _EMAIL,
@@ -443,15 +473,24 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
             F.sum(F.size(F.regexp_extract_all("text", F.lit(pat), 0)))
             for pat in (_CC, _SSN, _IPV4, _EMAIL, _PHONE)
         ).cast("long")
-        summary["n_pii_matches_scrubbed"] = int(
-            curated.agg(n_matches.alias("n")).collect()[0]["n"] or 0
-        )
-        curated = curated.withColumn(
+        curated = _observe(
+            curated, n_pii_matches_scrubbed=n_matches
+        ).withColumn(
             "text", scrub_pii(F.col("text"))
         ).withColumn("n_chars", F.length("text").cast("long"))
 
     io.append(curated, args.output)
-    summary["n_curated"] = final.count()
+    for obs in observed:
+        summary.update(obs.values)
+    summary["n_curated"] = n_live = summary[live]
+    for dropped, after in (
+        ("n_c4_dropped_docs", "n_after_c4"),
+        ("n_paragraph_emptied_docs", "n_after_paragraph_dedup"),
+        ("n_fully_cut_docs", "n_after_span_cut"),
+    ):
+        if dropped in summary:  # payload rewrites, in the order they ran
+            n_live -= summary[dropped]
+            summary[after] = n_live
     if args.report:
         report = spark.createDataFrame(
             [

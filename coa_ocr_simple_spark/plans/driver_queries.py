@@ -401,14 +401,19 @@ def _char_shingles(df: DataFrame, k: int, out: str = "sh") -> DataFrame:
     both branches (slice of a short array == the full text).
     """
     rx = f"(?s)(?=(.{{{k}}}))"
-    pre = df.withColumn("_cs", F.split(F.col("text"), ""))
+    # only astral rows split: _cs is NULL on BMP rows, and its three
+    # references below keep CollapseProject from inlining the split
+    pre = df.withColumn(
+        "_cs",
+        F.when(F.col("text").rlike(_ASTRAL_RX), F.split(F.col("text"), "")),
+    )
     n = F.greatest(F.size("_cs") - F.lit(k - 1), F.lit(1))
     slow = F.transform(
         F.sequence(F.lit(0), n - 1),
         lambda i: F.concat_ws("", F.slice(F.col("_cs"), i + 1, F.lit(k))),
     )
     shingles = (
-        F.when(F.col("text").rlike(_ASTRAL_RX), slow)
+        F.when(F.col("_cs").isNotNull(), slow)
         .when(F.length("text") < k, F.array(F.col("text")))
         .otherwise(F.regexp_extract_all(F.col("text"), F.lit(rx), 1))
     )

@@ -7,6 +7,7 @@ import random
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from coa_ocr_simple_spark.jobs.curate import parse_args, run
@@ -741,3 +742,179 @@ def test_curate_drop_ppl_tail_stage(spark, tmp_path):
     # terciles: at most 2/3 of survivors ship, and the head+middle are
     # non-empty (the stage is a split, not a rubber stamp or a wipe)
     assert 0 < len(kept) <= 2 * n_surv // 3 + 1
+
+
+def _stage_corpus(tmp_path):
+    """Every stage of the --gopher-filter --c4-clean --pii-scrub run has
+    work: junk and exact dups for the funnel, an all-bullet doc for
+    Gopher, a three-line page for C4, planted PII for the scrub."""
+    rng = random.Random(23)
+    vocab = [f"word{j}" for j in range(500)]
+    stop = ["the", "and", "of", "to", "in", "is"]
+
+    def line(n=9):
+        ws = [rng.choice(stop) if k % 3 == 0 else rng.choice(vocab) for k in range(n)]
+        return " ".join(ws) + "."
+
+    rows = [{"doc_id": i, "text": "\n".join(line() for _ in range(6))} for i in range(16)]
+    rows[3]["text"] += "\nmail bob@example.com or call 555-123-4567 today."
+    rows[7]["text"] += "\nhost 10.0.0.12 and ssn 123-45-6789 on file."
+    rows.append({"doc_id": 16, "text": "\n".join(line() for _ in range(3))})
+    rows.append(
+        {"doc_id": 17, "text": "\n".join(f"- the item{k} and of note{k}" for k in range(12))}
+    )
+    rows += [{"doc_id": i, "text": rows[5]["text"]} for i in (18, 19)]
+    rows += [{"doc_id": i, "text": "zzz qqq xxx " * 10} for i in (20, 21)]
+    for r in rows:
+        r.update({"lang": "en", "source": "s", "n_chars": len(r["text"])})
+    path = str(tmp_path / "stage_docs.parquet")
+    pq.write_table(pa.Table.from_pylist(rows), path)
+    return path
+
+
+def _explicit_counts(spark, path, flags):
+    """The summary recomputed with one count()/agg() per stage frame —
+    the pre-observation way of reading the same numbers."""
+    from coa_ocr_simple_spark.plans.driver_queries_corpus import (
+        _CC, _EMAIL, _IPV4, _PHONE, _SSN,
+    )
+    from coa_ocr_simple_spark.plans.driver_queries_dedup import curation_stages
+    from coa_ocr_simple_spark.plans.driver_queries_quality import (
+        c4_line_clean,
+        gopher_quality_signals,
+    )
+
+    docs = spark.read.parquet(path)
+    st = curation_stages(docs)
+    want = {
+        "n_total": docs.count(),
+        "n_quality": st.quality.count(),
+        "n_after_exact_dedup": st.surviving_exact.count(),
+        "n_curated": st.final.count(),
+        "jaccard_min": 80,
+        "near_dup_policy": "pair_loser",
+    }
+    if not flags:
+        return want
+    bad = (
+        gopher_quality_signals(docs.join(st.final, "doc_id", "left_semi"))
+        .where(F.col("is_gopher_bad") == 1)
+        .select("doc_id")
+    )
+    final = st.final.join(bad, "doc_id", "left_anti")
+    want["n_after_gopher"] = want["n_curated"] = final.count()
+    c4 = c4_line_clean(docs.join(final, "doc_id", "left_semi"))
+    want["n_c4_dropped_docs"] = c4.where("is_dropped").count()
+    want["n_after_c4"] = want["n_curated"] - want["n_c4_dropped_docs"]
+    n_matches = sum(
+        F.sum(F.size(F.regexp_extract_all("text_clean", F.lit(p), 0)))
+        for p in (_CC, _SSN, _IPV4, _EMAIL, _PHONE)
+    )
+    want["n_pii_matches_scrubbed"] = (
+        c4.where(~F.col("is_dropped")).agg(n_matches).first()[0]
+    )
+    return want
+
+
+@pytest.mark.parametrize("flags", [[], ["--gopher-filter", "--c4-clean", "--pii-scrub"]])
+def test_observed_counts_equal_explicit_counts(spark, tmp_path, flags):
+    """Every summary count is an observed metric of an action the job
+    already runs; each must equal an explicit count() of the same frame,
+    and the shipped rows must match the last count."""
+    path = _stage_corpus(tmp_path)
+    out = str(tmp_path / "observed_out")
+    summary = run(parse_args(["--input", path, "--output", out] + flags), spark)
+    want = _explicit_counts(spark, path, flags)
+    assert summary == want
+    shipped = want.get("n_after_c4", want["n_curated"])
+    assert spark.read.parquet(out).count() == shipped
+    if flags:  # every stage did some work on this corpus
+        assert want["n_quality"] < want["n_total"]
+        assert want["n_after_exact_dedup"] < want["n_quality"]
+        assert want["n_after_gopher"] < want["n_after_exact_dedup"]
+        assert 0 < want["n_c4_dropped_docs"] < want["n_after_gopher"]
+        assert want["n_pii_matches_scrubbed"] == 4
+
+
+def _sql_actions(spark, job_ids):
+    """SQL executions that ran any of ``job_ids``, read from Spark's SQL
+    status store once its listener has caught up."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(n - 50, 0), 50)
+    return sum(
+        1
+        for i in range(recent.size())
+        if any(recent.apply(i).jobs().contains(j) for j in job_ids)
+    )
+
+
+def test_default_curate_run_action_and_job_budget(spark, tmp_path):
+    """The default run is three SQL actions (input fill, bands fill,
+    output write) — the stage counts cost no job of their own.  27 Spark
+    jobs on this corpus and session; the per-stage count() design ran 9
+    actions and 39 jobs."""
+    path = _corpus(tmp_path)
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    sc.setJobGroup("curate-default-budget", "curate job budget")
+    try:
+        run(parse_args(["--input", path, "--output", str(tmp_path / "b")]), spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    job_ids = sc.statusTracker().getJobIdsForGroup("curate-default-budget")
+    assert len(job_ids) <= 27
+    assert _sql_actions(spark, job_ids) == 3
+
+
+def _write_docs(tmp_path, rows, name):
+    schema = pa.schema(
+        [("doc_id", pa.int64()), ("text", pa.string()), ("lang", pa.string()),
+         ("source", pa.string()), ("n_chars", pa.int64())]
+    )
+    for r in rows:
+        r.update({"lang": "en", "source": "s", "n_chars": len(r["text"])})
+    path = str(tmp_path / name)
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+    return path
+
+
+@pytest.mark.parametrize("corpus", ["all_junk", "empty"])
+@pytest.mark.parametrize("flags", [[], ["--gopher-filter", "--c4-clean", "--encoding-clean", "--pii-scrub"]])
+def test_degenerate_corpus_gives_zero_summary(spark, tmp_path, corpus, flags):
+    """A corpus the quality gate drops entirely, and an empty input: AQE
+    prunes the observed branches (their metrics never arrive, or arrive
+    empty), yet the run neither hangs nor raises and every count is 0."""
+    import threading
+
+    rows = [{"doc_id": i, "text": "zzz qqq xxx " * 10} for i in range(6)]
+    path = _write_docs(tmp_path, rows if corpus == "all_junk" else [], "degenerate.parquet")
+    out = str(tmp_path / "degenerate_out")
+    result = {}
+
+    def _run():
+        result["summary"] = run(parse_args(["--input", path, "--output", out] + flags), spark)
+
+    t = threading.Thread(target=_run, daemon=True)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive(), "curate run hung reading its stage counts"
+    summary = result["summary"]
+    assert summary.pop("n_total") == len(rows if corpus == "all_junk" else [])
+    assert summary.pop("jaccard_min") == 80
+    assert summary.pop("near_dup_policy") == "pair_loser"
+    assert summary and set(summary.values()) == {0}, summary
+    assert spark.read.parquet(out).count() == 0
+
+
+def test_c4_dropping_every_survivor_still_counts_them(spark, tmp_path):
+    """When C4 drops every survivor, AQE replaces the write's join with an
+    empty relation and the observed drop count never arrives; the count
+    is recomputed from the same frame, not read as 0."""
+    path = _corpus(tmp_path)  # single-line docs: every page fails C4
+    out = str(tmp_path / "c4_all")
+    summary = run(parse_args(["--input", path, "--output", out, "--c4-clean"]), spark)
+    assert summary["n_curated"] == summary["n_c4_dropped_docs"] == 20
+    assert summary["n_after_c4"] == 0
+    assert spark.read.parquet(out).count() == 0

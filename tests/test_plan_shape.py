@@ -157,3 +157,27 @@ def test_lm_perplexity_plan_has_no_windows(spark):
     s = df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in s
     assert "CartesianProduct" not in s
+
+
+def test_char_shingles_splits_only_astral_rows(spark):
+    """_char_shingles: only astral rows pay the char-array split (BMP
+    rows get a NULL array), the split stays in its own projection (not
+    inlined into the per-position lambda), and both branches equal the
+    codepoint-slice reference."""
+    from coa_ocr_simple_spark.plans.driver_queries import _char_shingles
+
+    texts = ["abcdefgh", "ab\U0001F600cdef", "ab", None]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    out = _char_shingles(df, 3)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    split_proj = [ln for ln in plan.splitlines() if "split(text" in ln]
+    assert len(split_proj) == 1 and "AS _cs" in split_proj[0]
+    assert "CASE WHEN RLIKE(text" in split_proj[0]
+    assert "lambdafunction" not in split_proj[0]
+
+    def ref(t, k=3):
+        cs = list(t)
+        return ["".join(cs[i:i + k]) for i in range(max(len(cs) - k + 1, 1))]
+
+    got = {r["doc_id"]: r["sh"] for r in out.collect()}
+    assert got == {i: (None if t is None else ref(t)) for i, t in enumerate(texts)}
