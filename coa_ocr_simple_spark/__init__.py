@@ -11,4 +11,10 @@ Layout (SURVEY.md §7):
 - ``fixtures``  seed-fixed synthetic spans/media generators (FIXTURES.md)
 """
 
+from ._worker_imports import install as _install_worker_imports
+
 __version__ = "0.1.0"
+
+# every UDF the package ships references it, so a Python worker runs this
+# before its first batch (see _worker_imports)
+_install_worker_imports()

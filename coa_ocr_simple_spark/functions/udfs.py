@@ -3,8 +3,13 @@ executors.  No per-row Python UDFs anywhere (BASELINE.json input_hint).
 
 All UDFs use the ``Iterator`` forms so per-worker setup (model-config
 parse, regex compilation via module import) is amortized across Arrow
-batches — the idiomatic equivalent of the reference's lazy singleton init
+batches and, with reused Python workers, across tasks — the idiomatic
+equivalent of the reference's lazy singleton init
 (/root/reference/ai_document_processor.py:190-202; SURVEY.md §4.1).
+Per-TASK setup is not amortized: every task re-reads its command and
+calls ``importlib.invalidate_caches()``.  On Python < 3.12 that re-parses
+every zip archive on the worker's path, except the unchanged ones that
+``_worker_imports`` (installed on package import) lets skip the re-read.
 
 Every UDF delegates to ``coa_ocr_simple_spark.core`` — the same functions
 the test oracle runs single-node, so oracle ≡ pipeline by construction.

@@ -37,7 +37,7 @@ from ..plans.ann_index import (
     quantized,
     search_index_frames,
 )
-from ..sources.tables import TableIO
+from ..sources.tables import TableIO, path_exists
 
 
 def run_build(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -101,11 +101,10 @@ def _coarse_kind(spark: SparkSession, index: str) -> str:
     a transient read failure on a lloyd_l2 index must raise, not
     silently encode new vectors under the wrong metric — that would
     permanently place codes in lists the lloyd-routed search never
-    probes."""
-    import os
-
+    probes.  ``path_exists`` looks where Spark reads, so a URI or HDFS
+    index is not mistaken for a pre-manifest one."""
     meta_path = f"{index}/meta"
-    if not os.path.exists(meta_path):
+    if not path_exists(spark, meta_path):
         return "seed_dot"  # pre-manifest index
     row = spark.read.parquet(meta_path).collect()[0]
     return row["coarse"] if "coarse" in row.asDict() else "seed_dot"

@@ -18,13 +18,14 @@ AQE on by default (post-shuffle coalesce + skew-join splitting).
 from __future__ import annotations
 
 import argparse
-
-from pyspark.sql import SparkSession
-
 import os
 
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
 from ..core.config import EMPTY_CONFIG, ModelConfig
-from ..operators.checkpoint import partition_metrics
+from ..operators.checkpoint import LINEAGE_RUN, partition_metrics
+from ..operators.observed import Observed
 from ..plans.extract_plan import (
     ExtractOptions,
     build_extract_plan,
@@ -102,6 +103,14 @@ def make_session(
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
+    """Extract ``args.input`` and append the results to ``args.output``.
+
+    ``docs_written`` is the number of rows this invocation appended, an
+    observed metric of the append itself.  A ``--run-id`` reused across
+    invocations therefore counts only this invocation's rows, while the
+    ``--checkpoint`` metrics cover every output row under that run id.
+    One SQL action without ``--checkpoint`` (the append), two with it (the
+    append, then the metrics over a re-read of the output)."""
     io = TableIO(spark)
     docs = io.read(args.input)
     media = io.read_if_exists(args.media) if args.media else None
@@ -152,15 +161,14 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         # spec replaces this explicit repartition.)
         results = results.repartition(args.output_buckets, "doc_id")
 
-    io.append(results, args.output)
+    appended = Observed.rows(results, "docs_written")
+    io.append(appended.df, args.output)
 
-    written = io.read(args.output).where(f"_run_id = '{args.run_id}'")
-    metrics = partition_metrics(written)
     if args.checkpoint:
-        io.append(metrics, args.checkpoint)
+        written = io.read(args.output).where(F.col(LINEAGE_RUN) == args.run_id)
+        io.append(partition_metrics(written), args.checkpoint)
 
-    n_docs = written.count()
-    return {"run_id": args.run_id, "docs_written": n_docs}
+    return {"run_id": args.run_id, **appended.values}
 
 
 def parse_args(argv=None) -> argparse.Namespace:

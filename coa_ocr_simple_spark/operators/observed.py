@@ -17,8 +17,9 @@ Two rules keep an observed value equal to a ``count()`` of the frame:
   and had rows; ``Observation.get`` then raises ``AssertionError`` in
   ``PythonSQLUtils.toPyRow``.  A branch the optimizer removes at
   planning time may never report, and ``Observation.get`` blocks
-  forever.  ``Observed`` reads the metrics without blocking and, when
-  they are missing, computes the same aggregates directly over the
+  forever.  ``Observed`` waits only until Spark's listener bus has
+  delivered every event of the actions that ran and, when the metrics
+  are still missing, computes the same aggregates directly over the
   frame (over the cache when the caller persisted it).
 """
 
@@ -58,11 +59,18 @@ class Observed:
         if not jo.future().isCompleted():
             # the metrics are set by a listener on Spark's asynchronous
             # event bus; once the bus is drained, an observation still
-            # open was never reported by the actions that ran
-            try:
-                SparkContext._active_spark_context._jsc.sc().listenerBus().waitUntilEmpty()
-            except Py4JJavaError:  # bus not drained in time
-                pass
+            # open was never reported by the actions that ran.  A slow bus
+            # is waited out, never taken for missing metrics: the fallback
+            # re-runs the frame, a whole UDF plan when it feeds a write.
+            bus = SparkContext._active_spark_context._jsc.sc().listenerBus()
+            while True:
+                try:
+                    bus.waitUntilEmpty()  # raises after 10 s still busy
+                    break
+                except Py4JJavaError as exc:
+                    name = exc.java_exception.getClass().getName()
+                    if name != "java.util.concurrent.TimeoutException":
+                        raise
             if not jo.future().isCompleted():
                 return None
         if jo.getRow().length() == 0:  # metrics dropped by an AQE prune

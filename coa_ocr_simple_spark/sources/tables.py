@@ -11,13 +11,40 @@ filter pushdown from the DataSource V2 interface.
 
 from __future__ import annotations
 
-import os
-
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
 def _is_path(identifier: str) -> bool:
     return "/" in identifier or identifier.endswith(".parquet")
+
+
+def _listing(spark: SparkSession, path: str) -> bool | list[str]:
+    """What ``path`` holds on the filesystem Spark reads and writes it on:
+    False when absent, True for a file, the entry names for a directory.
+
+    The path goes through the session's Hadoop ``FileSystem``, so a path
+    with no scheme resolves against ``fs.defaultFS`` and the filesystem's
+    working directory exactly as a Spark read or write does; ``os.path``
+    would read an HDFS or S3 path, or any URI, as absent."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    try:
+        statuses = fs.listStatus(jpath)
+    except Py4JJavaError as exc:
+        if exc.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            return False
+        raise
+    # listing a file gives the file's own status
+    if len(statuses) == 1 and statuses[0].getPath().equals(fs.makeQualified(jpath)):
+        return True
+    return [status.getPath().getName() for status in statuses]
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether the file or directory ``path`` exists where Spark would
+    read it."""
+    return _listing(spark, path) is not False
 
 
 class TableIO:
@@ -63,12 +90,15 @@ class TableIO:
             df.writeTo(identifier).createOrReplace()
 
     def exists(self, identifier: str) -> bool:
-        if _is_path(identifier):
-            return os.path.exists(identifier) and any(
-                name.endswith(".parquet") or name.startswith("part-")
-                for name in os.listdir(identifier)
-            ) if os.path.isdir(identifier) else os.path.exists(identifier)
-        return self.spark.catalog.tableExists(identifier)
+        """A catalog table, a file, or a directory holding a data file; a
+        directory with none, as a write that never committed leaves it,
+        reads as absent."""
+        if not _is_path(identifier):
+            return self.spark.catalog.tableExists(identifier)
+        found = _listing(self.spark, identifier)
+        if isinstance(found, bool):
+            return found
+        return any(name.endswith(".parquet") or name.startswith("part-") for name in found)
 
     def read_if_exists(self, identifier: str) -> DataFrame | None:
         return self.read(identifier) if self.exists(identifier) else None

@@ -257,6 +257,9 @@ def test_coarse_lloyd_index_roundtrip_and_metric_consistency(spark, tmp_path):
         spark,
     )
     assert _coarse_kind(spark, index) == "lloyd_l2"
+    # a URI names the same manifest; only a truly absent one is pre-manifest
+    assert _coarse_kind(spark, f"file://{index}") == "lloyd_l2"
+    assert _coarse_kind(spark, f"file://{tmp_path}/no_index") == "seed_dot"
     meta = spark.read.parquet(f"{index}/meta").collect()[0]
     assert meta["coarse"] == "lloyd_l2"
 

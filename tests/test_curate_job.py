@@ -836,36 +836,18 @@ def test_observed_counts_equal_explicit_counts(spark, tmp_path, flags):
         assert want["n_pii_matches_scrubbed"] == 4
 
 
-def _sql_actions(spark, job_ids):
-    """SQL executions that ran any of ``job_ids``, read from Spark's SQL
-    status store once its listener has caught up."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
-    n = store.executionsCount()
-    recent = store.executionsList(max(n - 50, 0), 50)
-    return sum(
-        1
-        for i in range(recent.size())
-        if any(recent.apply(i).jobs().contains(j) for j in job_ids)
-    )
-
-
-def test_default_curate_run_action_and_job_budget(spark, tmp_path):
+def test_default_curate_run_action_and_job_budget(spark, tmp_path, job_and_action_counts):
     """The default run is three SQL actions (input fill, bands fill,
     output write) — the stage counts cost no job of their own.  27 Spark
     jobs on this corpus and session; the per-stage count() design ran 9
     actions and 39 jobs."""
     path = _corpus(tmp_path)
     spark.catalog.clearCache()
-    sc = spark.sparkContext
-    sc.setJobGroup("curate-default-budget", "curate job budget")
-    try:
-        run(parse_args(["--input", path, "--output", str(tmp_path / "b")]), spark)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    job_ids = sc.statusTracker().getJobIdsForGroup("curate-default-budget")
-    assert len(job_ids) <= 27
-    assert _sql_actions(spark, job_ids) == 3
+    n_jobs, n_actions = job_and_action_counts(
+        lambda: run(parse_args(["--input", path, "--output", str(tmp_path / "b")]), spark)
+    )
+    assert n_jobs <= 27
+    assert n_actions == 3
 
 
 def _write_docs(tmp_path, rows, name):
