@@ -157,18 +157,19 @@ def run_compact(args: argparse.Namespace, spark: SparkSession) -> dict:
     it — the nightly maintenance run that keeps the base table the
     single source of truth.  vec_ids already in the base are dropped
     (the stream may have re-ingested a bulk vector); the stream area is
-    removed only AFTER the appended rows are materialized."""
+    removed only AFTER the appended rows are materialized.  A kill
+    between the append and the removal needs no commit marker: the
+    re-run's base anti-join appends nothing twice."""
     import shutil
 
     io = TableIO(spark)
     stream_dir = f"{args.index}/codes_stream"
-    try:
-        ingest = spark.read.parquet(stream_dir)
-    except Exception:
+    if not path_exists(spark, stream_dir):
         return {"n_compacted": 0, "stream_area": "absent"}
     base = io.read(f"{args.index}/codes")
     moved = (
-        ingest.select(*base.columns)
+        spark.read.parquet(stream_dir)
+        .select(*base.columns)
         .dropDuplicates(["vec_id"])
         .join(base.select("vec_id"), "vec_id", "left_anti")
         .persist()

@@ -12,11 +12,11 @@ the embeddings table the rerank path fetches raw vectors from.
         [--report /path/forget_report]
 
 The delete list is a parquet table with a ``doc_id`` column (vec_ids
-share the id domain).  Every touched table is rewritten IN PLACE via a
-staged sibling directory + swap — Spark cannot overwrite a path it is
-reading, and a half-written rewrite must never be visible under the
-original path.  Re-running with the same list is a no-op (idempotent:
-everything is an anti-join).
+share the id domain).  Every touched table is rewritten IN PLACE through
+``sources.commit.swap`` in its parent directory — Spark cannot overwrite
+a path it is reading, and a half-written rewrite must never be visible
+under the original path.  Re-running with the same list is a no-op
+(idempotent: everything is an anti-join).
 
 Scale shape: the delete list broadcasts (takedown lists are thousands,
 not billions); each rewrite is one scan + broadcast anti-join + write.
@@ -29,84 +29,45 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import TableIO
+from ..sources import commit
+from ..sources.tables import TableIO, _is_path
 
 
-_STAGING_SUFFIX = ".__forget_staging"
-
-
-def _staging_for(path: str) -> str:
-    """Hidden staging sibling for ``path`` — DOT-prefixed (round-6
-    advisor item) so a leftover never corrupts Spark partition
-    discovery of the parent (a bare ``batch=N.__forget_staging``
-    sibling inside codes_stream broke ingested_codes()/compact
-    readers)."""
-    clean = path.rstrip("/")
-    parent, name = os.path.split(clean)
-    return os.path.join(parent, "." + name + _STAGING_SUFFIX)
-
-
-def _recover_staging(path: str) -> None:
-    """Finish or roll back an interrupted rewrite of ``path`` before
-    touching it (round-6 advisor item): staging alongside an intact
-    target means the swap never started (the staging write may be torn)
-    — discard it; staging with the target MISSING means the crash hit
-    between delete and rename — promote the fully-written staging."""
-    staging = _staging_for(path)
-    if not os.path.exists(staging):
-        return
-    if os.path.exists(path):
-        shutil.rmtree(staging)
-    else:
-        shutil.move(staging, path)
-
-
-def _rewrite_in_place(
-    io: TableIO, df: DataFrame, path: str
-) -> None:
-    """Materialize ``df`` fully into a hidden staging sibling, then swap
-    it under the original path — never overwrite a path being read.
-    Handles single-file parquet targets (a layout this repo's own sf
-    tables use): the old file is os.remove'd and the staging DIRECTORY
-    takes its name.  A crash at any point is repaired by
-    _recover_staging on the next run.
+def _split(path: str) -> tuple[str, str]:
+    """(parent directory, entry name) of a path-based table — the root
+    and the name of its commit swap.
 
     PATH targets only: a catalog (Iceberg) table would instead take a
     transactional ``DELETE FROM t WHERE id IN (...)`` and needs no
-    staging dance — that branch activates with the Iceberg runtime jar
+    swap — that branch activates with the Iceberg runtime jar
     (ICEBERG.md)."""
-    from ..sources.tables import _is_path
-
     if not _is_path(path):
         raise ValueError(
             f"forget rewrites path-based tables; got identifier {path!r} "
             "(catalog tables want a transactional DELETE instead)"
         )
-    staging = _staging_for(path)
-    io.overwrite(df, staging)
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    else:
-        os.remove(path)
-    shutil.move(staging, path)
+    parent, name = os.path.split(path.rstrip("/"))
+    return parent or ".", name
 
 
 def _scrub(
     io: TableIO, path: str, key: str, ids: DataFrame
 ) -> int:
-    """Anti-join rewrite of one parquet path; returns rows removed."""
-    _recover_staging(path)
+    """Anti-join rewrite of one parquet path (a directory or a
+    single-file table, which becomes a directory); returns rows
+    removed."""
+    root, name = _split(path)
+    commit.recover(root)
     before = io.read(path)
     n_before = before.count()
     kept = before.join(
         F.broadcast(ids.withColumnRenamed("doc_id", key)), key, "left_anti"
     )
-    _rewrite_in_place(io, kept, path)
+    commit.swap(root, name, [name], lambda staged: io.overwrite(kept, staged))
     return n_before - io.read(path).count()
 
 
@@ -125,7 +86,7 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     # would re-read the already-scrubbed path); delete lists are small
     # by the job's contract (they broadcast), so the collect is cheap
     def _present(path: str, key: str) -> set:
-        _recover_staging(path)
+        commit.recover(_split(path)[0])
         return {
             r[key]
             for r in io.read(path)
@@ -159,16 +120,12 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         )
         # streaming-ingest area: each batch=N subdirectory is its own
         # parquet root (flat files + partition dirs must not mix), so
-        # scrub them one by one — recovering first any staging whose
-        # target dir vanished in a crash (it would not show up in the
-        # batch= listing below)
+        # scrub them one by one — finishing first any swap a crash cut
+        # short (its dir would be missing from the listing below)
         stream_dir = f"{args.index}/codes_stream"
         n_stream = 0
         if os.path.isdir(stream_dir):
-            for name in sorted(os.listdir(stream_dir)):
-                if name.startswith(".") and name.endswith(_STAGING_SUFFIX):
-                    target = name[1 : -len(_STAGING_SUFFIX)]
-                    _recover_staging(os.path.join(stream_dir, target))
+            commit.recover(stream_dir)
             for name in sorted(os.listdir(stream_dir)):
                 if name.startswith("batch="):
                     n_stream += _scrub(

@@ -1,13 +1,12 @@
-"""Shared sum-merged sketch-state sink for streaming twins whose
-cross-batch state is an additive partial table (Count-Min grids,
-value histograms): batch_id-keyed overwrite subdirectories + a
-replay-aware compactor.
+"""Shared sum-merged sketch state for streaming twins whose cross-batch
+state is an additive partial table (Count-Min grids, value histograms):
+partials written by ``_runner.write_batch`` + a replay-aware compactor.
 
 Because + is NOT idempotent (unlike HLL's max), replay safety rests on
 two rules every consumer of this module inherits:
 
 1. a replayed batch OVERWRITES its own ``batch=<id>`` subdirectory —
-   never appends (write_partial);
+   never appends (``_runner.write_batch``);
 2. compaction folds every partial EXCEPT the highest batch id — the
    only batch a checkpoint-resumed stream may re-deliver; folding it
    would turn that replay into a double count (compact_state).
@@ -16,21 +15,11 @@ two rules every consumer of this module inherits:
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# staging directory for crash-safe compaction, INSIDE state_path so the
-# rename at the end is same-filesystem; the leading dot keeps Spark's
-# root-path partition discovery (merged_state) from ever seeing it
-_COMPACT_TMP = ".compact_tmp"
-
-
-def write_partial(df: DataFrame, state_path: str, batch_id: int) -> None:
-    """Idempotent per-batch state sink (batch_id-keyed overwrite — for
-    a SUM-merged sketch the load-bearing half of replay safety)."""
-    df.write.mode("overwrite").parquet(f"{state_path}/batch={int(batch_id)}")
+from ..sources import commit
 
 
 def _sum_aggs(value):
@@ -48,39 +37,6 @@ def merged_state(
     )
 
 
-def _finish_compaction(state_path: str) -> None:
-    """Complete (or roll back) a staged compaction — idempotent, called
-    both as the normal commit path and as crash recovery at the start of
-    the next compaction.
-
-    Protocol: the merged partial and THEN a MANIFEST listing the folded
-    ``batch=`` dir names are written under ``.compact_tmp`` before any
-    fold dir is deleted; the manifest's presence is the commit point.
-    - staging without a manifest (crash mid-write): every fold dir is
-      still intact — discard the staging dir, nothing was lost;
-    - staging with a manifest (crash mid-delete/promote): the merged
-      partial already holds every manifest dir's content — delete any
-      listed dir that survives, promote the merged partial to
-      ``batch=-1``, drop the staging dir.  Re-running after a crash
-      inside THIS function redoes the same idempotent steps."""
-    tmp = os.path.join(state_path, _COMPACT_TMP)
-    if not os.path.isdir(tmp):
-        return
-    manifest = os.path.join(tmp, "MANIFEST")
-    out = os.path.join(tmp, "batch=-1")
-    if not (os.path.isfile(manifest) and os.path.isdir(out)):
-        shutil.rmtree(tmp)  # uncommitted staging; fold dirs all intact
-        return
-    with open(manifest) as f:
-        folded = [line.strip() for line in f if line.strip()]
-    for name in folded:
-        p = os.path.join(state_path, name)
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-    shutil.move(out, os.path.join(state_path, "batch=-1"))
-    shutil.rmtree(tmp)
-
-
 def compact_state(
     spark: SparkSession, state_path: str, keys: list[str], value
 ) -> None:
@@ -88,13 +44,12 @@ def compact_state(
     EXCEPT the highest-numbered batch, which stays live as the replay
     target.  Call between triggers or with the query stopped.
 
-    Crash-safe (round 6, advisor item): the merged replacement is staged
-    INSIDE ``state_path`` and committed via a manifest before any fold
-    dir is deleted — a kill at any point either leaves every fold dir
-    intact (staging discarded) or completes deterministically on the
-    next call (see _finish_compaction); summed state can no longer be
-    silently lost, which the + merge could never detect or repair."""
-    _finish_compaction(state_path)  # recover any interrupted run first
+    The merged partial replaces the folded dirs through
+    ``sources.commit.swap``, so a kill at any point either leaves every
+    fold dir intact or completes on the next call; summed state is
+    never silently lost, which the + merge could never detect or
+    repair."""
+    commit.recover(state_path)
     batches = sorted(
         int(name.split("=", 1)[1])
         for name in os.listdir(state_path)
@@ -109,13 +64,6 @@ def compact_state(
     merged = spark.read.parquet(
         *[f"{state_path}/{n}" for n in fold_names]
     ).groupBy(*keys).agg(*_sum_aggs(value))
-    tmp = os.path.join(state_path, _COMPACT_TMP)
-    if os.path.isdir(tmp):  # only possible via a concurrent compactor
-        shutil.rmtree(tmp)
-    merged.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/batch=-1")
-    with open(os.path.join(tmp, "MANIFEST.part"), "w") as f:
-        f.write("\n".join(fold_names) + "\n")
-    os.replace(
-        os.path.join(tmp, "MANIFEST.part"), os.path.join(tmp, "MANIFEST")
+    commit.swap(
+        state_path, "batch=-1", fold_names, merged.coalesce(1).write.parquet
     )
-    _finish_compaction(state_path)

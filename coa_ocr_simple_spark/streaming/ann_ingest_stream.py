@@ -11,10 +11,8 @@ Scale shape: the quantizer frames are tiny and static (broadcast into
 every batch); per-batch encoding is the same bounded
 assignment-rank + per-(vec, subspace) codeword argmin the batch path
 runs, entirely batch-local — no cross-batch state, no watermark.  Each
-batch lands under ``<index>/codes_stream/batch=<id>`` with
-overwrite-per-batch semantics, so an at-least-once foreachBatch replay
-replaces its own rows rather than duplicating them (the
-decontaminate_stream recipe).  The ingest area is a SIBLING of the
+batch lands under ``<index>/codes_stream`` through
+``_runner.write_batch``.  The ingest area is a SIBLING of the
 bulk ``codes/`` table — mixing flat base files and ``batch=`` partition
 dirs under one root breaks Spark's partition discovery — and a search
 unions the two (``ingested_codes`` below); the `ann_index compact`
@@ -41,6 +39,8 @@ from pyspark.sql.types import (
 )
 
 from ..plans.ann_index import encode_frames, quantized
+from ..sources.tables import path_exists
+from ._runner import to_batches
 
 __all__ = [
     "EMBEDDINGS_FLAT",
@@ -61,13 +61,10 @@ def ingested_codes(spark: SparkSession, index_path: str) -> DataFrame:
     The batch partition column is dropped — search does not care which
     micro-batch a vector arrived in."""
     base = spark.read.parquet(f"{index_path}/codes")
-    try:
-        ingest = spark.read.parquet(f"{index_path}/codes_stream").select(
-            *base.columns
-        )
-    except Exception:  # no stream area yet
+    stream_dir = f"{index_path}/codes_stream"
+    if not path_exists(spark, stream_dir):
         return base
-    return base.unionByName(ingest)
+    return base.unionByName(spark.read.parquet(stream_dir).select(*base.columns))
 
 
 def run_streaming_ann_ingest(
@@ -81,7 +78,7 @@ def run_streaming_ann_ingest(
     """Encode arriving embedding files with the stored quantizer and
     land their packed code rows under ``<index>/codes_stream/batch=<id>``.
     Restarting from the checkpoint resumes at the first unprocessed
-    file; replayed batches overwrite their own subdirectory."""
+    file."""
     from ..jobs.ann_index import _coarse_kind
 
     centroids = spark.read.parquet(f"{index_path}/centroids")
@@ -89,19 +86,12 @@ def run_streaming_ann_ingest(
     coarse = _coarse_kind(spark, index_path)
     stream = spark.readStream.schema(EMBEDDINGS_FLAT).parquet(input_path)
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        codes = encode_frames(
+    return to_batches(
+        stream,
+        lambda batch_df: encode_frames(
             quantized(batch_df), centroids, codebook, coarse=coarse
-        )
-        codes.write.mode("overwrite").parquet(
-            f"{index_path}/codes_stream/batch={int(batch_id)}"
-        )
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+        ),
+        f"{index_path}/codes_stream",
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..plans.driver_queries_mix import block_occurrences
+from ._runner import to_parquet
 from .dedup_stream import DOCUMENTS_FLAT
 
 
@@ -41,14 +42,4 @@ def run_streaming_block_dedup(
     available_now=True."""
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(input_path)
     survivors = block_occurrences(stream).dropDuplicates(["bh"])
-    writer = (
-        survivors.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", stream_checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return to_parquet(survivors, output_path, stream_checkpoint, available_now)

@@ -15,27 +15,19 @@ inside ``foreachBatch`` (the file source delivers each doc in exactly
 one micro-batch), no cross-batch state, no watermark.  dl is a per-doc
 property and derives from the batch itself; df / n_docs / avgdl_m ride
 the model rows — scores are therefore IDENTICAL to the batch scorer on
-the same docs (pinned by tests/test_bm25_stream.py).  The sink
-overwrites a batch_id-keyed subdirectory, so at-least-once replays are
-idempotent (the decontaminate_stream recipe).
+the same docs (pinned by tests/test_bm25_stream.py).  Sink:
+``_runner.write_batch``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..plans.driver_queries_corpus import bm25_model, bm25_score
+from ._runner import to_batches
 from .dedup_stream import DOCUMENTS_FLAT
 
 __all__ = ["bm25_model", "bm25_score", "run_streaming_bm25"]
-
-
-def write_scores_batch(
-    scores: DataFrame, output_path: str, batch_id: int
-) -> None:
-    scores.write.mode("overwrite").parquet(
-        f"{output_path}/batch={int(batch_id)}"
-    )
 
 
 def run_streaming_bm25(
@@ -49,18 +41,13 @@ def run_streaming_bm25(
 ):
     """Score documents against the standing queries as files arrive.
     Restarting from the checkpoint resumes at the first unprocessed
-    file; replayed batches overwrite their own subdirectory."""
+    file."""
     model = spark.read.parquet(model_path)
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(input_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_scores_batch(bm25_score(batch_df, model), output_path, batch_id)
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream,
+        lambda batch_df: bm25_score(batch_df, model),
+        output_path,
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

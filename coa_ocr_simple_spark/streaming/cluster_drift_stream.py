@@ -10,7 +10,7 @@ vectors —
   the signal that schedules a re-train / index rebuild).
 
 State is a _sum_state sketch (batch==stream sum-merge exactness,
-batch_id-keyed overwrite replay safety, highest-batch-id-live
+replay safety from ``_runner.write_batch``, highest-batch-id-live
 compaction).  Distances are the exact integers of _ivf_lloyd_assign,
 de-scaled per row (d2 DIV Q^2) before summing so totals stay BIGINT-
 safe at any stream length — the kmeans_clusters recipe.
@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 
 from ..plans.driver_queries_ext import _PQ_LLOYD_Q, _ivf_lloyd_assign
 from ..plans.ann_index import quantized
-from ._sum_state import compact_state, merged_state, write_partial
+from ._runner import to_batches
+from ._sum_state import compact_state, merged_state
 
 _VALUES = ["n_vectors", "sum_d2q"]
 _Q2 = _PQ_LLOYD_Q * _PQ_LLOYD_Q
@@ -112,19 +113,10 @@ def run_streaming_cluster_drift(
     centroids = load_monitor_centroids(spark, index_path)
     schema = spark.read.parquet(emb_path).schema
     stream = spark.readStream.schema(schema).parquet(emb_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_partial(
-            cluster_batch_stats(quantized(batch_df), centroids),
-            state_path,
-            batch_id,
-        )
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream,
+        lambda batch_df: cluster_batch_stats(quantized(batch_df), centroids),
+        state_path,
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

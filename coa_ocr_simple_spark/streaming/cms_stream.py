@@ -17,9 +17,7 @@ sink design follows from it:
   tests/test_cms_stream.py against cms_term_counts.
 - **Replay is NOT free**: unlike max, + is not idempotent — a
   re-merged replayed batch WOULD double-count.  Replay safety rests
-  entirely on the batch_id-keyed overwrite sink (a replayed batch
-  overwrites its own subdirectory), the same contract as
-  streaming/embed_stats_stream.py.  Consequently `compact_cms_state`
+  entirely on ``_runner.write_batch``.  Consequently `compact_cms_state`
   folds all partials EXCEPT the highest batch id's: after a restart,
   the only batch foreachBatch may re-deliver is the last uncommitted
   one, and folding it into the compacted file would turn that replay
@@ -34,18 +32,11 @@ estimate never rescans document bytes.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans.driver_queries_sketch import cms_estimate, cms_grid_partials
-from ._sum_state import compact_state, merged_state, write_partial
+from ._runner import to_batches
+from ._sum_state import compact_state, merged_state
 from .dedup_stream import DOCUMENTS_FLAT
-
-
-def write_grid_batch(grid: DataFrame, state_path: str, batch_id: int) -> None:
-    """Idempotent per-batch state sink (batch_id-keyed overwrite — the
-    repo-wide foreachBatch convention, and for a SUM-merged sketch the
-    load-bearing half of replay safety)."""
-    write_partial(grid, state_path, batch_id)
 
 
 def merged_grid(spark: SparkSession, state_path: str) -> DataFrame:
@@ -88,15 +79,6 @@ def run_streaming_cms(
     unprocessed file; query running estimates at any time with
     :func:`cms_state_estimate`."""
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(docs_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_grid_batch(cms_grid_partials(batch_df), state_path, batch_id)
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream, cms_grid_partials, state_path, stream_checkpoint, available_now
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

@@ -17,10 +17,7 @@ join shuffle-free on the static side.  The per-candidate verdict is a
 batch-local rollup inside ``foreachBatch`` — exact, because the file
 source delivers each candidate doc in exactly one micro-batch — so no
 cross-batch state and no watermark are needed.  Exactness extends to
-the SINK: foreachBatch is at-least-once (a crash between write and
-checkpoint commit replays the batch), so each batch overwrites its own
-batch_id-keyed subdirectory instead of blind-appending — replays are
-idempotent (see write_flags_batch).
+the sink, ``_runner.write_batch``.
 
 One semantics, two drivers: the gram plan is the same ``_token_grams``
 the batch query runs — the batch DuckDB oracle covers the gram + join
@@ -38,6 +35,7 @@ from ..plans.driver_queries_quality import (
     _MAX_GRAM_TRAIN_DOCS,
     _token_grams,
 )
+from ._runner import to_batches
 from .dedup_stream import DOCUMENTS_FLAT
 
 
@@ -77,18 +75,6 @@ def flag_contaminated(candidates: DataFrame, static_grams: DataFrame) -> DataFra
     )
 
 
-def write_flags_batch(flagged: DataFrame, output_path: str, batch_id: int) -> None:
-    """Idempotent per-batch sink.  ``foreachBatch`` is at-least-once: a
-    crash between the sink write and the checkpoint commit replays the
-    SAME batch (same batch_id) on restart.  A blind append would then
-    duplicate every flagged row; writing each batch to its own
-    ``batch=<id>`` subdirectory with overwrite makes the replay a no-op
-    (the rewrite replaces the partial/duplicate data), so the flagged
-    output is exactly-once end-to-end.  Readers scan ``output_path``
-    as-is — the subdirectories surface as a ``batch`` partition column."""
-    flagged.write.mode("overwrite").parquet(f"{output_path}/batch={int(batch_id)}")
-
-
 def run_streaming_decontamination(
     spark: SparkSession,
     candidates_path: str,
@@ -100,21 +86,13 @@ def run_streaming_decontamination(
 ):
     """Incrementally screen candidate docs as files arrive; contaminated
     ones land in ``output_path`` with their overlap mass.  Restarting
-    from the checkpoint resumes at the first unprocessed file; a replayed
-    batch overwrites its own batch_id-keyed subdirectory instead of
-    appending duplicates (see write_flags_batch)."""
+    from the checkpoint resumes at the first unprocessed file."""
     static_grams = spark.read.parquet(train_grams_path)
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(candidates_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_flags_batch(flag_contaminated(batch_df, static_grams), output_path, batch_id)
-
-    writer = (
-        stream.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", stream_checkpoint)
+    return to_batches(
+        stream,
+        lambda batch_df: flag_contaminated(batch_df, static_grams),
+        output_path,
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

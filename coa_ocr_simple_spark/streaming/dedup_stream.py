@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ._runner import to_parquet
+
 DOCUMENTS_FLAT = StructType(
     [
         StructField("doc_id", LongType()),
@@ -58,14 +60,4 @@ def run_streaming_dedup(
         .dropDuplicates(["content_hash"])
         .select("doc_id", "content_hash", "n_chars")
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", stream_checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return to_parquet(deduped, output_path, stream_checkpoint, available_now)

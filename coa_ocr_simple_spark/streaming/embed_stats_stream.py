@@ -17,8 +17,8 @@ batch computation satisfies the integer identity
 moments-based streaming answer is bit-identical to the batch query
 over the union of all vectors streamed so far, under ANY file/batch
 split.  Merge is SUM (associative + commutative but NOT idempotent,
-unlike HLL's max), so replay safety comes entirely from the repo-wide
-batch_id-keyed overwrite sink convention.
+unlike HLL's max), so replay safety comes entirely from
+``_runner.write_batch``.
 
 State layout (one table, exactly mergeable by SUM over (label, d)):
     d in [0, dim)  ->  component sum of dimension d
@@ -40,6 +40,8 @@ from pyspark.sql.types import (
 )
 
 from ..plans.driver_queries_ext import _quantize
+from ._runner import to_batches
+from ._sum_state import merged_state
 
 EMBEDDINGS_LABELED = StructType(
     [
@@ -85,19 +87,11 @@ def moment_partials(emb_raw: DataFrame) -> DataFrame:
     )
 
 
-def merged_moments(spark: SparkSession, state_path: str) -> DataFrame:
-    return (
-        spark.read.parquet(state_path)
-        .groupBy("label", "d")
-        .agg(F.sum("s").alias("s"))
-    )
-
-
 def label_stats_estimate(spark: SparkSession, state_path: str) -> DataFrame:
     """(label, n_vectors, mean_sq_norm, centroid_m, msd): the running
     drift triple — column-identical and VALUE-identical to the batch
     embedding_label_stats over the union of everything streamed."""
-    m = merged_moments(spark, state_path).persist()
+    m = merged_state(spark, state_path, ["label", "d"], "s").persist()
     m.count()  # three consumers below
     n = m.where(F.col("d") == _D_COUNT).select(
         "label", F.col("s").alias("n_vectors")
@@ -142,21 +136,8 @@ def run_streaming_embed_stats(
     *,
     available_now: bool = True,
 ):
-    """Maintain the moment state as embedding files arrive.  Replayed
-    batches overwrite their own ``batch=<id>`` subdirectory (SUM is not
-    idempotent — the keyed sink is what makes at-least-once safe)."""
+    """Maintain the moment state as embedding files arrive."""
     stream = spark.readStream.schema(EMBEDDINGS_LABELED).parquet(input_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        moment_partials(batch_df).write.mode("overwrite").parquet(
-            f"{state_path}/batch={int(batch_id)}"
-        )
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream, moment_partials, state_path, stream_checkpoint, available_now
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.schemas import DOCUMENTS
 from ..plans.extract_plan import ExtractOptions, build_extract_plan
 from ..sources.tables import TableIO
+from ._runner import start
 
 
 def run_streaming_extract(
@@ -59,14 +60,8 @@ def run_streaming_extract(
         )
         io.append(results, output_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", stream_checkpoint)
-        .outputMode("append")
+    return start(
+        stream.writeStream.foreachBatch(process_batch),
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now:
-        query.awaitTermination()
-    return query

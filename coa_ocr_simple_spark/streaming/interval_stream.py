@@ -11,7 +11,7 @@ and the exact BETWEEN re-check runs as a post-filter.  Each batch then
 reduces to a per-anchor (n_events, sum_value_mille) partial — additive,
 so the running totals are a _sum_state sketch like the Count-Min grid
 and the quantile histogram: batch==stream sum-merge exactness, replay
-safety from the batch_id-keyed overwrite sink, compaction that keeps
+safety from ``_runner.write_batch``, compaction that keeps
 the highest batch id live.
 
 The one semantic difference from the batch query: anchors here are an
@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.driver_queries_ext import _IVAL_BUCKET_US, _epoch_us_ntz
-from ._sum_state import compact_state, merged_state, write_partial
+from ._runner import to_batches
+from ._sum_state import compact_state, merged_state
 
 _VALUES = ["n_events", "sum_value_mille"]
 
@@ -110,17 +111,10 @@ def run_streaming_interval_counts(
         )
     schema = spark.read.parquet(events_path).schema
     stream = spark.readStream.schema(schema).parquet(events_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_partial(
-            interval_batch_counts(batch_df, anchors), state_path, batch_id
-        )
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream,
+        lambda batch_df: interval_batch_counts(batch_df, anchors),
+        state_path,
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

@@ -15,9 +15,8 @@ Scale shape: the static model is tiny and COMPLETE over the bucket
 domain (<= 4096 rows — broadcast), so per-batch scoring is one gram
 explode -> broadcast inner equi-join -> batch-local per-doc rollup
 inside ``foreachBatch`` (the file source delivers each doc in exactly
-one micro-batch), no cross-batch state, no watermark; the sink
-overwrites a batch_id-keyed subdirectory, making at-least-once replays
-idempotent (the decontaminate_stream recipe).
+one micro-batch), no cross-batch state, no watermark; sink:
+``_runner.write_batch``.
 
 One semantics, two drivers: ``nb_score`` is the same expression the
 oracle-checked batch query runs; the streaming tests verify incremental
@@ -26,9 +25,10 @@ delivery, restart continuation and batch agreement.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..plans.driver_queries_quality import nb_model, nb_score
+from ._runner import to_batches
 from .dedup_stream import DOCUMENTS_FLAT
 
 __all__ = [
@@ -36,13 +36,6 @@ __all__ = [
     "nb_score",
     "run_streaming_nb_quality",
 ]
-
-
-def write_scores_batch(scores: DataFrame, output_path: str, batch_id: int) -> None:
-    """Idempotent per-batch sink: each batch overwrites its own
-    ``batch=<id>`` subdirectory, so an at-least-once foreachBatch replay
-    replaces rather than duplicates (see decontaminate_stream)."""
-    scores.write.mode("overwrite").parquet(f"{output_path}/batch={int(batch_id)}")
 
 
 def run_streaming_nb_quality(
@@ -56,19 +49,13 @@ def run_streaming_nb_quality(
 ):
     """Score documents as files arrive; every doc lands in
     ``output_path`` with its llr and quality verdict.  Restarting from
-    the checkpoint resumes at the first unprocessed file; replayed
-    batches overwrite their own subdirectory."""
+    the checkpoint resumes at the first unprocessed file."""
     model = spark.read.parquet(model_path)
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(input_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_scores_batch(nb_score(batch_df, model), output_path, batch_id)
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream,
+        lambda batch_df: nb_score(batch_df, model),
+        output_path,
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

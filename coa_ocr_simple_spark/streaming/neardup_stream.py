@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 
 from ..plans.driver_queries import minhash_bands
 from ..plans.driver_queries_dedup import _MAX_BUCKET
+from ._runner import to_parquet
 from .dedup_stream import DOCUMENTS_FLAT
 
 PAIRS = StructType(
@@ -113,15 +114,4 @@ def run_streaming_neardup(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    writer = (
-        pairs.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", stream_checkpoint)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return to_parquet(pairs, output_path, stream_checkpoint, available_now)

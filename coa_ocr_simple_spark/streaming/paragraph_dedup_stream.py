@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..plans.driver_queries_mix import paragraph_occurrences
+from ._runner import to_parquet
 from .dedup_stream import DOCUMENTS_FLAT
 
 
@@ -42,14 +43,4 @@ def run_streaming_paragraph_dedup(
     available_now=True."""
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(input_path)
     survivors = paragraph_occurrences(stream).dropDuplicates(["h"])
-    writer = (
-        survivors.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", stream_checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return to_parquet(survivors, output_path, stream_checkpoint, available_now)

@@ -11,9 +11,8 @@ is the big side (reference-corpus vocab), the per-batch stream side is
 small; the join keys are the bigram words, so the static table can be
 bucketed by (a, b) at write time.  The per-doc rollup is batch-local
 inside ``foreachBatch`` (the file source delivers each doc in exactly
-one micro-batch), so no cross-batch state and no watermark; the sink
-overwrites a batch_id-keyed subdirectory, making at-least-once replays
-idempotent (the decontaminate_stream recipe).
+one micro-batch), so no cross-batch state and no watermark; sink:
+``_runner.write_batch``.
 
 One semantics, two drivers: ``lm_score`` is the same expression the
 oracle-checked batch query runs; the streaming tests verify incremental
@@ -25,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.driver_queries_quality import lm_score, lm_train_counts
+from ._runner import to_batches
 from .dedup_stream import DOCUMENTS_FLAT
 
 __all__ = [
@@ -42,13 +42,6 @@ def score_batch(batch_docs: DataFrame, static_counts: DataFrame) -> DataFrame:
     return lm_score(batch_docs, static_counts)
 
 
-def write_scores_batch(scores: DataFrame, output_path: str, batch_id: int) -> None:
-    """Idempotent per-batch sink: each batch overwrites its own
-    ``batch=<id>`` subdirectory, so an at-least-once foreachBatch replay
-    replaces rather than duplicates (see decontaminate_stream)."""
-    scores.write.mode("overwrite").parquet(f"{output_path}/batch={int(batch_id)}")
-
-
 def run_streaming_perplexity(
     spark: SparkSession,
     input_path: str,
@@ -60,21 +53,13 @@ def run_streaming_perplexity(
 ):
     """Score documents as files arrive; every doc lands in
     ``output_path`` with its bits and fluency verdict.  Restarting from
-    the checkpoint resumes at the first unprocessed file; replayed
-    batches overwrite their own subdirectory."""
+    the checkpoint resumes at the first unprocessed file."""
     static_counts = spark.read.parquet(counts_path)
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(input_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_scores_batch(
-            score_batch(batch_df, static_counts), output_path, batch_id
-        )
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream,
+        lambda batch_df: score_batch(batch_df, static_counts),
+        output_path,
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

@@ -9,9 +9,7 @@ quality signals:
 - ``run_streaming_quality`` emits the combined Gopher + C4 attribute
   row per doc via ``foreachBatch`` (the two signal frames join
   batch-locally — each doc arrives in exactly one micro-batch under
-  the file source) with the batch_id-keyed idempotent sink the other
-  streaming jobs use, so at-least-once replays replace rather than
-  duplicate.
+  the file source) into ``_runner.write_batch``.
 
 Semantics are the oracle-checked batch queries' own expressions —
 ``gopher_quality_signals`` (rowwise form parity-pinned by
@@ -27,6 +25,7 @@ from ..plans.driver_queries_quality import (
     char_entropy_stats,
     gopher_quality_signals,
 )
+from ._runner import to_batches, to_parquet
 from .dedup_stream import DOCUMENTS_FLAT
 
 __all__ = [
@@ -69,18 +68,9 @@ def run_streaming_gopher(
     projection -> parquet append sink.  Exactly-once via the sink's
     _spark_metadata commit log + source checkpoint."""
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(input_path)
-    writer = (
-        gopher_quality_signals(stream)
-        .writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", stream_checkpoint)
-        .outputMode("append")
+    return to_parquet(
+        gopher_quality_signals(stream), output_path, stream_checkpoint, available_now
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
 
 
 def run_streaming_quality(
@@ -91,20 +81,8 @@ def run_streaming_quality(
     *,
     available_now: bool = True,
 ):
-    """Combined Gopher + C4 tagging as files arrive; replayed batches
-    overwrite their own ``batch=<id>`` subdirectory (idempotent)."""
+    """Combined Gopher + C4 tagging as files arrive."""
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(input_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        quality_batch(batch_df).write.mode("overwrite").parquet(
-            f"{output_path}/batch={int(batch_id)}"
-        )
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream, quality_batch, output_path, stream_checkpoint, available_now
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

@@ -11,8 +11,8 @@ single-pass batch answer (pinned by tests/test_quantile_stream.py).
 State size is bounded by the number of DISTINCT lengths seen, not the
 corpus size — the same value-domain bound the batch plan exploits.
 
-Replay safety follows streaming/_sum_state.py's two rules (overwrite
-sink, highest-batch-id never compacted): + is not idempotent.
+Replay safety follows streaming/_sum_state.py's two rules: + is not
+idempotent.
 """
 
 from __future__ import annotations
@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.driver_queries_corpus import quantiles_from_hist
-from ._sum_state import compact_state, merged_state, write_partial
+from ._runner import to_batches
+from ._sum_state import compact_state, merged_state
 from .dedup_stream import DOCUMENTS_FLAT
 
 
@@ -60,15 +61,6 @@ def run_streaming_length_quantiles(
     arrive; read the running exact percentiles at any time with
     :func:`length_quantiles_state`."""
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(docs_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_partial(length_hist_partials(batch_df), state_path, batch_id)
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream, length_hist_partials, state_path, stream_checkpoint, available_now
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

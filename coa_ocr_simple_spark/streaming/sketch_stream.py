@@ -19,9 +19,8 @@ Two properties carry the correctness story:
   the streaming analogue of the batch query's DuckDB oracle.
 - **Replay-idempotence for free**: max() is also idempotent, so even a
   blind re-merge of a replayed batch could not change the state.  The
-  sink still follows the repo-wide batch_id-keyed overwrite convention
-  (a replayed batch overwrites its own subdirectory) so the state
-  directory never accumulates duplicate FILES either.
+  sink is still ``_runner.write_batch``, so the state directory never
+  accumulates duplicate FILES either.
 
 Scale shape: per-batch work is one explode + one map-side-combinable
 max aggregate; cross-batch state is O(sources * 256) rows TOTAL (times
@@ -33,19 +32,15 @@ never rescans any document bytes.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.driver_queries_sketch import hll_estimate, hll_register_partials
+from ..sources import commit
+from ._runner import to_batches
 from .dedup_stream import DOCUMENTS_FLAT
-
-
-def write_registers_batch(regs: DataFrame, state_path: str, batch_id: int) -> None:
-    """Idempotent per-batch state sink: each micro-batch's register
-    partials land in their own ``batch=<id>`` subdirectory with
-    overwrite, so an at-least-once replay rewrites rather than
-    duplicates (the repo-wide foreachBatch sink convention)."""
-    regs.write.mode("overwrite").parquet(f"{state_path}/batch={int(batch_id)}")
 
 
 def merged_registers(spark: SparkSession, state_path: str) -> DataFrame:
@@ -72,21 +67,13 @@ def compact_hll_state(spark: SparkSession, state_path: str) -> None:
     appending their own subdirectories.  Estimate-preserving because the
     merged register table IS a valid partial (max is idempotent); safe
     against a concurrent reader only between triggers — call it from the
-    foreachBatch hook or while the query is stopped."""
-    import shutil
-    import tempfile
-    import os
-
-    merged = merged_registers(spark, state_path)
-    tmp = tempfile.mkdtemp(prefix="hll_compact_")
-    try:
-        merged.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/batch=-1")
-        for name in os.listdir(state_path):
-            if name.startswith("batch="):
-                shutil.rmtree(os.path.join(state_path, name))
-        shutil.move(f"{tmp}/batch=-1", os.path.join(state_path, "batch=-1"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    foreachBatch hook or while the query is stopped.  The merged partial
+    replaces every ``batch=`` dir through ``sources.commit.swap``, so a
+    kill at any point loses no register."""
+    commit.recover(state_path)
+    names = [n for n in os.listdir(state_path) if n.startswith("batch=")]
+    merged = merged_registers(spark, state_path).coalesce(1)
+    commit.swap(state_path, "batch=-1", names, merged.write.parquet)
 
 
 def run_streaming_hll(
@@ -102,17 +89,6 @@ def run_streaming_hll(
     the first unprocessed file; query the running estimate at any time
     with :func:`hll_state_estimate`."""
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(docs_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_registers_batch(
-            hll_register_partials(batch_df), state_path, batch_id
-        )
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream, hll_register_partials, state_path, stream_checkpoint, available_now
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ._runner import to_parquet
+
 SESSION_GAP_SECONDS = 30 * 60
 
 OUTPUT = StructType(
@@ -113,16 +115,4 @@ def run_stateful_sessions(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    writer = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", stream_checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now:
-        query.awaitTermination()
-    return query
+    return to_parquet(sessions, output_path, stream_checkpoint, available_now)

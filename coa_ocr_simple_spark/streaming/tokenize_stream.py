@@ -15,15 +15,15 @@ is encoded in the micro-batch that delivers it.  The engine dispatch
 (JVM fold vs Arrow-batched pandas for production-size merge lists) is
 the batch encoder's, untouched.
 
-Sink: batch_id-keyed overwrite subdirectories (the decontaminate_stream
-recipe) make at-least-once foreachBatch replays idempotent.
+Sink: ``_runner.write_batch``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..plans.bpe import encode_corpus
+from ._runner import to_batches
 from .dedup_stream import DOCUMENTS_FLAT
 
 __all__ = ["load_merges", "run_streaming_tokenize"]
@@ -39,16 +39,6 @@ def load_merges(spark: SparkSession, merges_path: str) -> list[tuple[str, str, i
     ]
 
 
-def write_tokens_batch(
-    encoded: DataFrame, output_path: str, batch_id: int
-) -> None:
-    """Idempotent per-batch sink: each batch overwrites its own
-    ``batch=<id>`` subdirectory."""
-    encoded.write.mode("overwrite").parquet(
-        f"{output_path}/batch={int(batch_id)}"
-    )
-
-
 def run_streaming_tokenize(
     spark: SparkSession,
     input_path: str,
@@ -60,23 +50,13 @@ def run_streaming_tokenize(
     available_now: bool = True,
 ):
     """Encode documents as files arrive; restarting from the checkpoint
-    resumes at the first unprocessed file; replayed batches overwrite
-    their own subdirectory."""
+    resumes at the first unprocessed file."""
     merges = load_merges(spark, merges_path)
     stream = spark.readStream.schema(DOCUMENTS_FLAT).parquet(input_path)
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        write_tokens_batch(
-            encode_corpus(batch_df, merges, engine=engine),
-            output_path,
-            batch_id,
-        )
-
-    writer = stream.writeStream.foreachBatch(_emit).option(
-        "checkpointLocation", stream_checkpoint
+    return to_batches(
+        stream,
+        lambda batch_df: encode_corpus(batch_df, merges, engine=engine),
+        output_path,
+        stream_checkpoint,
+        available_now,
     )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()

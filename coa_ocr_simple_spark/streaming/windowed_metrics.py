@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ._runner import to_parquet
+
 
 def run_windowed_event_counts(
     spark: SparkSession,
@@ -53,16 +55,4 @@ def run_windowed_event_counts(
             "approx_users",
         )
     )
-
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", stream_checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now:
-        query.awaitTermination()
-    return query
+    return to_parquet(agg, output_path, stream_checkpoint, available_now)

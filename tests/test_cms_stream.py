@@ -105,10 +105,10 @@ def test_replayed_batch_overwrites_not_doubles(spark, tmp_path):
     from coa_ocr_simple_spark.plans.driver_queries_sketch import (
         cms_grid_partials,
     )
-    from coa_ocr_simple_spark.streaming.cms_stream import (
-        cms_state_estimate,
-        write_grid_batch,
+    from coa_ocr_simple_spark.streaming._runner import (
+        write_batch as write_grid_batch,
     )
+    from coa_ocr_simple_spark.streaming.cms_stream import cms_state_estimate
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     probe = _probe(spark).persist()

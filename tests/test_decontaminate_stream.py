@@ -111,10 +111,12 @@ def test_replayed_batch_does_not_duplicate_flags(spark, tmp_path):
     the sink write and the checkpoint commit replays the same batch_id on
     restart.  The sink must be idempotent: re-emitting a batch (same id)
     leaves exactly one row per flagged doc, not two."""
+    from coa_ocr_simple_spark.streaming._runner import (
+        write_batch as write_flags_batch,
+    )
     from coa_ocr_simple_spark.streaming.decontaminate_stream import (
         flag_contaminated,
         train_grams,
-        write_flags_batch,
     )
 
     train_path = str(tmp_path / "train.parquet")

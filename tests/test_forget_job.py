@@ -206,20 +206,25 @@ def test_forget_handles_single_file_parquet_target(spark, tmp_path):
 
 
 def test_forget_recovers_interrupted_swap(spark, tmp_path):
-    """Crash between delete and rename left the table only under the
-    hidden staging sibling: the next run must promote it and proceed;
-    staging alongside an INTACT table must be discarded."""
+    """Crash after the commit point, between delete and rename, left the
+    table only under the hidden staging dir: the next run must promote
+    it and proceed; staging without a MANIFEST beside an INTACT table
+    must be discarded."""
     import os
 
-    from coa_ocr_simple_spark.jobs.forget import _staging_for
+    from coa_ocr_simple_spark.sources.commit import MANIFEST, STAGING
 
     docs = str(tmp_path / "documents.parquet")
     spark.read.parquet(f"{SF}/documents.parquet").write.parquet(docs)
     n_all = spark.read.parquet(docs).count()
 
-    # case 1: staging + missing target (post-delete crash) -> promoted
-    staging = _staging_for(docs)
-    shutil.move(docs, staging)
+    # case 1: committed staging + missing target (post-delete crash)
+    # -> promoted
+    staging = str(tmp_path / STAGING)
+    os.makedirs(staging)
+    shutil.move(docs, os.path.join(staging, "documents.parquet"))
+    with open(os.path.join(staging, MANIFEST), "w") as f:
+        f.write("documents.parquet\n")
     dl = str(tmp_path / "deletes.parquet")
     spark.createDataFrame([(3,)], "doc_id long").write.parquet(dl)
     summary = run(

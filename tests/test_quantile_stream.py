@@ -74,7 +74,9 @@ def test_replayed_batch_is_overwritten_not_summed(spark, tmp_path):
         length_hist_partials,
         length_quantiles_state,
     )
-    from coa_ocr_simple_spark.streaming._sum_state import write_partial
+    from coa_ocr_simple_spark.streaming._runner import (
+        write_batch as write_partial,
+    )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     state = str(tmp_path / "state")

@@ -80,10 +80,10 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     from coa_ocr_simple_spark.plans.driver_queries_sketch import (
         hll_register_partials,
     )
-    from coa_ocr_simple_spark.streaming.sketch_stream import (
-        hll_state_estimate,
-        write_registers_batch,
+    from coa_ocr_simple_spark.streaming._runner import (
+        write_batch as write_registers_batch,
     )
+    from coa_ocr_simple_spark.streaming.sketch_stream import hll_state_estimate
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     regs = hll_register_partials(docs)

@@ -10,11 +10,11 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from coa_ocr_simple_spark.sources.commit import STAGING as _COMPACT_TMP
+from coa_ocr_simple_spark.streaming._runner import write_batch as write_partial
 from coa_ocr_simple_spark.streaming._sum_state import (
-    _COMPACT_TMP,
     compact_state,
     merged_state,
-    write_partial,
 )
 
 
