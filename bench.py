@@ -48,25 +48,13 @@ CORPUS_CACHE = "/tmp/coa_bench_corpus"
 
 
 def make_session(cpus: int, shuffle_partitions: int | None = None):
-    from pyspark.sql import SparkSession
+    from coa_ocr_simple_spark import session
 
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("coa-bench")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        # size-based post-shuffle coalescing collapses CPU-bound pandas-UDF
-        # stages (tiny bytes, heavy per-row regex CPU) onto too few cores;
-        # keep AQE's skew handling, drop its coalescing for this workload
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # oracle parity must not depend on the host JVM's default zone
-        # (events.ts is timestamp-NTZ; see driver_queries_ext.event_funnel)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    return session.make_session(
+        "coa-bench",
+        f"local[{cpus}]",
+        shuffle_partitions or cpus,
+        ["spark.ui.enabled=false", "spark.driver.memory=16g"],
     )
 
 

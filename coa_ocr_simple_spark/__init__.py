@@ -8,6 +8,7 @@ Layout (SURVEY.md §7):
 - ``sources``   table readers/writers (Iceberg when available, Parquet fallback)
 - ``plans``     end-to-end DataFrame plan builders
 - ``jobs``      spark-submit entry points
+- ``session``   the one SparkSession factory and its SQL defaults
 - ``fixtures``  seed-fixed synthetic spans/media generators (FIXTURES.md)
 """
 

@@ -26,7 +26,6 @@ accumulate.
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +37,7 @@ from ..plans.ann_index import (
     search_index_frames,
 )
 from ..sources.tables import TableIO, path_exists
+from . import _cli
 
 
 def run_build(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -256,26 +256,22 @@ def parse_args(argv=None) -> argparse.Namespace:
     )
 
     for q in (b, a, c, s):
-        q.add_argument("--master", default=None)
-        q.add_argument("--shuffle-partitions", type=int, default=None)
-        q.add_argument("--conf", action="append", default=[])
+        _cli.add_session_args(q)
     return p.parse_args(argv)
 
 
-def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-ann-index", args.master, args.shuffle_partitions, args.conf
-    )
+def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     fn = {
         "build": run_build,
         "add": run_add,
         "compact": run_compact,
         "search": run_search,
     }[args.cmd]
-    print(json.dumps(fn(args, spark), sort_keys=True))
+    return fn(args, spark)
+
+
+def main(argv=None) -> None:
+    _cli.main("coa-ann-index", parse_args, run, argv)
 
 
 if __name__ == "__main__":

@@ -24,7 +24,6 @@ integers — oracle-checked as the ``cluster_quota_sample`` extra query.
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 from ..plans.ann_index import quantized
 from ..plans.driver_queries_ext import cluster_quota_sample
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -81,20 +81,12 @@ def parse_args(argv=None) -> argparse.Namespace:
         "(doc_id == vec_id) are written to --output",
     )
     p.add_argument("--output", default=None)
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-cluster-sample", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-cluster-sample", parse_args, run, argv)
 
 
 if __name__ == "__main__":

@@ -51,7 +51,6 @@ lineage cut that follows the rewrite).  --report adds the report write.
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +58,7 @@ from pyspark.sql import functions as F
 from ..operators.observed import Observed
 from ..plans.driver_queries_dedup import _FUNNEL_JACCARD_MIN, curation_stages
 from ..sources.tables import TableIO
+from . import _cli
 
 
 # optional stages that read the survivor set on two branches
@@ -658,20 +658,12 @@ def parse_args(argv=None) -> argparse.Namespace:
         "over-redaction is the safe direction for a shipping corpus; "
         "pii_scan's validity counts quantify the bias)",
     )
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-curate", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-curate", parse_args, run, argv)
 
 
 if __name__ == "__main__":

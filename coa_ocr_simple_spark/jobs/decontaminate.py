@@ -29,7 +29,6 @@ an eager fill (no cross-branch CSE).
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark import StorageLevel
 from pyspark.sql import SparkSession
@@ -41,6 +40,7 @@ from ..plans.driver_queries_quality import (
     _token_grams,
 )
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def decontaminate_report(train, ev, n: int = _DECON_N, min_grams: int = 1):
@@ -119,20 +119,12 @@ def parse_args(argv=None) -> argparse.Namespace:
         default=1,
         help="flag a train doc only at >= this many distinct shared grams",
     )
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-decontaminate", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-decontaminate", parse_args, run, argv)
 
 
 if __name__ == "__main__":

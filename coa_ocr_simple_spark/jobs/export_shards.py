@@ -18,13 +18,13 @@ cross-checks the written files against it before reporting success.
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.driver_queries_mix import _N_SHARDS, shard_manifest, write_sharded
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -70,20 +70,12 @@ def parse_args(argv=None) -> argparse.Namespace:
     p.add_argument("--output", required=True, help="shard root directory")
     p.add_argument("--manifest", default=None, help="manifest table/path")
     p.add_argument("--n-shards", type=int, default=_N_SHARDS)
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-export-shards", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-export-shards", parse_args, run, argv)
 
 
 if __name__ == "__main__":

@@ -12,7 +12,8 @@ Sandbox (paths instead of catalog identifiers):
 
 Scale knobs map 1:1 to SURVEY.md §4.2: --spread-partitions (skew spread of
 exploded spans), --broadcast-media (force broadcast of the media store),
-AQE on by default (post-shuffle coalesce + skew-join splitting).
+AQE on by default (skew-join splitting; post-shuffle coalescing off, see
+``coa_ocr_simple_spark.session``).
 """
 
 from __future__ import annotations
@@ -31,7 +32,9 @@ from ..plans.extract_plan import (
     build_extract_plan,
     build_multi_tenant_plan,
 )
+from ..session import make_session  # noqa: F401  (perfbench imports it from here)
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def tenant_config_path(config_dir: str, tenant: str) -> str:
@@ -71,35 +74,6 @@ def load_tenant_configs(
             )
             out[tenant] = default
     return out
-
-
-def make_session(
-    app: str,
-    master: str | None,
-    shuffle_partitions: int | None,
-    extra_conf: list[str] | None = None,
-):
-    builder = SparkSession.builder.appName(app)
-    if master:
-        builder = builder.master(master)
-    for kv in extra_conf or []:
-        key, sep, value = kv.partition("=")
-        if not sep or not key:
-            raise SystemExit(f"--conf expects key=value, got: {kv!r}")
-        builder = builder.config(key, value)
-    builder = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # extraction stages are CPU-bound pandas UDFs over few bytes; AQE's
-        # size-based coalescing would serialize them (see bench.py)
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    if shuffle_partitions:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return builder.getOrCreate()
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -192,24 +166,12 @@ def parse_args(argv=None) -> argparse.Namespace:
     p.add_argument("--output-buckets", type=int, default=None)
     p.add_argument("--broadcast-media", action="store_true")
     p.add_argument("--include-full-text", action="store_true")
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument(
-        "--conf",
-        action="append",
-        default=[],
-        help="extra spark conf key=value (repeatable), as with spark-submit",
-    )
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-extract", args.master, args.shuffle_partitions, args.conf
-    )
-    summary = run(args, spark)
-    print(summary)
+    _cli.main("coa-extract", parse_args, run, argv)
 
 
 if __name__ == "__main__":

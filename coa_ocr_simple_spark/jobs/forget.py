@@ -27,7 +27,6 @@ requested id with where it was found.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..sources import commit
 from ..sources.tables import TableIO, _is_path
+from . import _cli
 
 
 def _split(path: str) -> tuple[str, str]:
@@ -183,20 +183,12 @@ def parse_args(argv=None) -> argparse.Namespace:
     p.add_argument("--embeddings", default=None)
     p.add_argument("--index", default=None)
     p.add_argument("--report", default=None)
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-forget", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-forget", parse_args, run, argv)
 
 
 if __name__ == "__main__":

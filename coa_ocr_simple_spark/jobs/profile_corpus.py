@@ -40,13 +40,13 @@ columns carried through the joins).  The source is NOT cached — at
 from __future__ import annotations
 
 import argparse
-import json
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def _signal_frames() -> dict[str, Callable[[DataFrame], DataFrame]]:
@@ -227,20 +227,12 @@ def parse_args(argv=None) -> argparse.Namespace:
         help="comma list from {lq,rep,gq,ng,c4,lm,dsir,nb,ent,ppl,enc,"
         "nfc,plang} (default: all)",
     )
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-profile", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-profile", parse_args, run, argv)
 
 
 if __name__ == "__main__":

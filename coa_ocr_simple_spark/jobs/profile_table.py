@@ -28,12 +28,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import TableIO
+from . import _cli
 
 _ATOMIC = {
     "string",
@@ -172,20 +172,12 @@ def parse_args(argv=None) -> argparse.Namespace:
         default=None,
         help="comma list of columns (default: every atomic column)",
     )
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-profile-table", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-profile-table", parse_args, run, argv)
 
 
 if __name__ == "__main__":

@@ -24,13 +24,13 @@ see plans/driver_queries_dedup.semdedup_prune (oracle-checked as the
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.driver_queries_dedup import semdedup_prune
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -74,20 +74,12 @@ def parse_args(argv=None) -> argparse.Namespace:
         default=None,
         help="optional surviving-embeddings table/path (payload anti-join)",
     )
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-semdedup", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-semdedup", parse_args, run, argv)
 
 
 if __name__ == "__main__":

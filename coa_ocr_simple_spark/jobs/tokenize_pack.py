@@ -24,13 +24,13 @@ the fragment table.
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.driver_queries_quality import _PACK_BIN_TOKENS, packing_split
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -96,9 +96,7 @@ def parse_args(argv=None) -> argparse.Namespace:
         help="also write the on-the-fly encoded corpus here",
     )
     p.add_argument("--output", required=True, help="fragment table/path")
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     args = p.parse_args(argv)
     if args.encoded_input:
         if args.input or args.merges:
@@ -113,13 +111,7 @@ def parse_args(argv=None) -> argparse.Namespace:
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-tokenize-pack", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-tokenize-pack", parse_args, run, argv)
 
 
 if __name__ == "__main__":

@@ -20,12 +20,12 @@ written for the packing/export stages.
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
 
 from ..plans.bpe import train_bpe
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -75,20 +75,12 @@ def parse_args(argv=None) -> argparse.Namespace:
         help="also apply the learned merges to the corpus and write "
         "(doc_id, tokens, n_tokens) here",
     )
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-train-bpe", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-train-bpe", parse_args, run, argv)
 
 
 if __name__ == "__main__":

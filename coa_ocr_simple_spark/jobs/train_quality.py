@@ -26,7 +26,6 @@ with overwrite semantics — re-running replaces the artifact.  With
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +37,7 @@ from ..plans.driver_queries_quality import (
     nb_score,
 )
 from ..sources.tables import TableIO
+from . import _cli
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -94,20 +94,12 @@ def parse_args(argv=None) -> argparse.Namespace:
         help="held-in labeled slice is doc_id %% 10 == this "
         f"(default {_NB_TRAIN_MOD}, the curate/profile convention)",
     )
-    p.add_argument("--master", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--conf", action="append", default=[])
+    _cli.add_session_args(p)
     return p.parse_args(argv)
 
 
 def main(argv=None) -> None:
-    from .extract import make_session
-
-    args = parse_args(argv)
-    spark = make_session(
-        "coa-train-quality", args.master, args.shuffle_partitions, args.conf
-    )
-    print(json.dumps(run(args, spark), sort_keys=True))
+    _cli.main("coa-train-quality", parse_args, run, argv)
 
 
 if __name__ == "__main__":

@@ -5,10 +5,12 @@ Usage: python scripts/dump_plans.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import make_session  # noqa: E402
 
@@ -134,7 +136,7 @@ def main() -> None:
         "windows, zero big-side shuffles, skew-immune by construction.",
     )
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(HEADER + "\n".join(sections))
     spark.stop()
 

@@ -9,22 +9,16 @@ from coa_ocr_simple_spark.fixtures.generate import (
     media_lookup,
     write_corpus,
 )
+from coa_ocr_simple_spark.session import make_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("coa-ocr-simple-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    spark = make_session(
+        "coa-ocr-simple-spark-tests",
+        "local[4]",
+        8,
+        ["spark.driver.memory=4g", "spark.ui.enabled=false"],
     )
     yield spark
     spark.stop()

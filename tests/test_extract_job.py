@@ -10,6 +10,7 @@ output already holds, and such a media store must resolve.
 
 from __future__ import annotations
 
+import json
 import random
 import threading
 
@@ -19,7 +20,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from coa_ocr_simple_spark.fixtures.generate import SpanBuilder, template_coa, write_corpus
-from coa_ocr_simple_spark.jobs.extract import parse_args, run
+from coa_ocr_simple_spark.jobs.extract import main, parse_args, run
 from coa_ocr_simple_spark.operators import observed
 
 N_DOCS = 40
@@ -50,6 +51,13 @@ def _prefix(spark, tmp_path, docs) -> str:
     path = str(tmp_path / "docs_prefix.parquet")
     spark.read.parquet(docs).where(F.col("doc_id") < PREFIX).write.parquet(path)
     return path
+
+
+def test_main_prints_the_summary_as_json(spark, tmp_path, capsys):
+    docs, media = _corpus(tmp_path)
+    out = str(tmp_path / "out")
+    main(["--input", docs, "--media", media, "--output", out, "--run-id", "cli"])
+    assert json.loads(capsys.readouterr().out) == {"run_id": "cli", "docs_written": N_DOCS}
 
 
 def test_all_done_resume_returns_zero(spark, tmp_path):

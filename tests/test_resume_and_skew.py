@@ -114,6 +114,7 @@ def test_kill_mid_write_resume_exactly_once(spark, tmp_path):
     the crash), and the kill waits for >= 3 committed task files — a
     genuinely multi-partition partial commit, not a single-file one."""
     import glob
+    import os
     import random
     import subprocess
     import sys
@@ -182,7 +183,7 @@ def test_kill_mid_write_resume_exactly_once(spark, tmp_path):
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.ui.showConsoleProgress=false",
         ],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         stdout=subprocess.DEVNULL,
         stderr=subprocess.DEVNULL,
     )
