@@ -1,15 +1,21 @@
 """End-to-end extraction plan builder (SURVEY.md §3.1 Spark lifecycle).
 
-    read documents ──> resume anti-join ──> explode spans
-        ──> skew spread (hash repartition on (doc_id, offset))
-        ──> media join + vectorized decode (pdf/image/html UDFs, text JVM-side)
-        ──> groupBy(doc_id) reassembly (the one wide shuffle)
-        ──> extractor pandas UDF (classify/sections/entities/tables/discovery)
-        ──> extracted rows (+ lineage columns)
+    read documents ──> resume anti-join ──┬──> exactly one text/html span
+                                          │      ──> fused UDF              [fast: narrow]
+                                          └──> every other document
+                                                 ──> explode spans
+                                                 ──> media spans: skew spread (hash
+                                                     repartition on (doc_id, offset))
+                                                     + media join
+                                                 ──> groupBy(doc_id) (the one wide shuffle)
+                                                 ──> fused UDF              [wide]
+        ──> union ──> extracted rows (+ lineage columns)
 
-Everything before the groupBy is narrow except the explicit skew-spread
-repartition; Catalyst prunes the parquet scan to (doc_id, spans) and
-pushes the resume anti-join below the explode.
+Both branches end in the same fused pandas UDF, which runs
+``core.extract_document`` once per document (decode, assemble, extract):
+one Python crossing per document.  The fast branch — the dominant
+web-corpus shape — never shuffles.  Catalyst prunes the parquet scan to
+(doc_id, spans) and pushes the resume anti-join below the explode.
 """
 
 from __future__ import annotations
@@ -20,9 +26,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.config import EMPTY_CONFIG, ModelConfig
-from ..functions.udfs import make_extractor_udf
-from ..operators.assemble import decode_spans, explode_spans, reassemble_documents
+from ..core.pipeline import SPAN_JOIN
+from ..functions.udfs import make_fused_extractor_udf
 from ..operators.checkpoint import resume_filter, with_lineage
+
+MEDIA_KINDS = ("pdf", "image")
 
 
 @dataclass
@@ -30,16 +38,9 @@ class ExtractOptions:
     config: ModelConfig = EMPTY_CONFIG
     spread_partitions: int | None = None  # skew spread for exploded spans
     broadcast_media: bool | None = None  # None -> AQE decides
-    include_full_text: bool = False  # full_text is big; opt-in (result
-    # carries out_spans already, so text is reconstructible)
+    include_full_text: bool = False  # full_text is big; opt-in (rebuilt
+    # JVM-side from out_spans, so it never crosses Arrow)
     run_id: str = "run-0"
-    fused: bool = True  # one Python crossing (decode+assemble+extract in a
-    # single UDF after the groupBy) vs the staged decode->group->extract
-    # plan; fused halves Arrow traffic and is the default
-    single_span_fastpath: bool = True  # docs whose spans array is exactly
-    # one text span (the dominant web-corpus shape) skip explode + groupBy
-    # entirely — their bytes never shuffle; only multi-span/media docs take
-    # the wide path
     passthrough_columns: tuple[str, ...] = ()  # input columns re-emitted
     # verbatim on every result row (constant per doc_id, e.g. a tenant
     # id) — carried through the plan, never re-joined
@@ -57,55 +58,18 @@ def build_extract_plan(
 
     todo = resume_filter(docs, done)
 
-    if options.fused and options.single_span_fastpath:
-        # text AND html qualify: neither needs the media join, and the
-        # fused UDF does the HTML strip itself
-        is_simple = (F.size("spans") == 1) & (
-            F.col("spans")[0]["kind"].isin("text", "html")
-        )
-        simple = todo.where(is_simple)
-        complex_docs = todo.where(~F.coalesce(is_simple, F.lit(False)))
-        fast = _fastpath_plan(simple, options)
-        wide = _fused_plan(
-            explode_spans(complex_docs, options.passthrough_columns), media, options
-        )
-        return fast.unionByName(wide)
-
-    spans = explode_spans(todo, options.passthrough_columns)
-
-    if options.fused:
-        return _fused_plan(spans, media, options)
-
-    decoded = decode_spans(
-        spans,
-        media,
-        spread_partitions=options.spread_partitions,
-        broadcast_media=options.broadcast_media,
-        passthrough=options.passthrough_columns,
+    # text AND html qualify: neither needs the media join, and the fused
+    # UDF does the HTML strip itself
+    is_simple = (F.size("spans") == 1) & (
+        F.col("spans")[0]["kind"].isin("text", "html")
     )
-    assembled = reassemble_documents(decoded, passthrough=options.passthrough_columns)
-
-    extract = make_extractor_udf(options.config.to_json())
-    extracted = assembled.withColumn("result", extract(F.col("text")))
-
-    columns = [
-        "doc_id",
-        *options.passthrough_columns,
-        "out_spans",
-        F.col("result.doc_type").alias("doc_type"),
-        F.col("result.confidence").alias("confidence"),
-        F.col("result.entities").alias("entities"),
-        F.col("result.hazard_codes").alias("hazard_codes"),
-        F.col("result.cas_numbers").alias("cas_numbers"),
-        F.col("result.test_results").alias("test_results"),
-        F.col("result.sections").alias("sections"),
-        F.col("result.fingerprint").alias("fingerprint"),
-        "n_spans",
-    ]
-    if options.include_full_text:
-        columns.append(F.col("text").alias("full_text"))
-
-    return with_lineage(extracted.select(*columns), options.run_id)
+    simple = todo.where(is_simple)
+    complex_docs = todo.where(~F.coalesce(is_simple, F.lit(False)))
+    fast = _fastpath_plan(simple, options)
+    wide = _fused_plan(
+        explode_spans(complex_docs, options.passthrough_columns), media, options
+    )
+    return fast.unionByName(wide)
 
 
 def build_multi_tenant_plan(
@@ -159,13 +123,29 @@ def build_multi_tenant_plan(
     return out
 
 
+def explode_spans(docs: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
+    """documents -> one row per span (zero-span docs kept with null span).
+
+    ``passthrough`` columns (e.g. a tenant id) ride along on every span
+    row so downstream regrouping can re-emit them without a join back to
+    the source."""
+    return docs.select(
+        "doc_id", *passthrough, F.posexplode_outer("spans").alias("pos", "span")
+    ).select(
+        "doc_id",
+        *passthrough,
+        F.col("span.kind").alias("kind"),
+        F.col("span.text").alias("text"),
+        F.col("span.media_ref").alias("media_ref"),
+        F.col("span.offset").alias("offset"),
+    )
+
+
 def _fastpath_plan(simple_docs: DataFrame, options: ExtractOptions):
     """Narrow plan for single-text-span documents: no explode, no media
     join, no groupBy — scan partitions flow straight into the fused UDF.
     The raw_spans column is built JVM-side in the same shape the UDF
     expects, so the Python body is byte-identical to the wide path."""
-    from ..functions.udfs import make_fused_extractor_udf
-
     raw_spans = F.transform(
         F.col("spans"),
         lambda s: F.struct(
@@ -183,36 +163,52 @@ def _fastpath_plan(simple_docs: DataFrame, options: ExtractOptions):
         *options.passthrough_columns,
         fused(raw_spans.alias("raw_spans")).alias("r"),
     )
-    return with_lineage(result.select(*_RESULT_COLUMNS(options)), options.run_id)
+    return _result_rows(result, options)
 
 
-def _RESULT_COLUMNS(options: ExtractOptions):
-    columns = [
-        "doc_id",
-        *options.passthrough_columns,
-        F.col("r.out_spans").alias("out_spans"),
-        F.col("r.doc_type").alias("doc_type"),
-        F.col("r.confidence").alias("confidence"),
-        F.col("r.entities").alias("entities"),
-        F.col("r.hazard_codes").alias("hazard_codes"),
-        F.col("r.cas_numbers").alias("cas_numbers"),
-        F.col("r.test_results").alias("test_results"),
-        F.col("r.sections").alias("sections"),
-        F.col("r.fingerprint").alias("fingerprint"),
-        F.col("r.n_spans").alias("n_spans"),
-    ]
+def _result_rows(result: DataFrame, options: ExtractOptions) -> DataFrame:
+    """Flatten the fused UDF's struct ``r`` into result columns (+ the
+    opt-in full_text, joined from out_spans as the oracle joins it)."""
+    rows = result.select("doc_id", *options.passthrough_columns, "r.*")
     if options.include_full_text:
-        columns.append(F.col("r.full_text").alias("full_text"))
-    return columns
+        rows = rows.withColumn(
+            "full_text",
+            F.array_join(F.transform("out_spans", lambda s: s["text"]), SPAN_JOIN),
+        )
+    return with_lineage(rows, options.run_id)
+
+
+def _media_spans(
+    spans: DataFrame, media: DataFrame | None, options: ExtractOptions
+) -> DataFrame:
+    """Media (pdf/image) span rows with their pages joined on media_ref.
+
+    The (doc_id, offset) spread runs BEFORE the join: pre-join span rows
+    are ~100 bytes (no page payload yet), so this shuffle is near-free,
+    and it is the only spread when the join broadcasts.  A shuffle join's
+    own hash on the unique media_ref re-spreads anyway."""
+    media_branch = spans.where(F.col("kind").isin(*MEDIA_KINDS)).drop("text")
+    if options.spread_partitions:
+        media_branch = media_branch.repartition(
+            options.spread_partitions, "doc_id", "offset"
+        )
+    if media is not None:
+        media_side = F.broadcast(media) if options.broadcast_media else media
+        media_branch = media_branch.join(media_side, on="media_ref", how="left")
+    else:
+        media_branch = media_branch.withColumn(
+            "pages", F.lit(None).cast("array<string>")
+        ).withColumn("ocr_pages", F.lit(None).cast("array<string>"))
+    return media_branch.select(
+        "doc_id", *options.passthrough_columns, "kind",
+        F.lit(None).cast("string").alias("text"),
+        "media_ref", "offset", "pages", "ocr_pages",
+    )
 
 
 def _fused_plan(spans: DataFrame, media: DataFrame | None, options: ExtractOptions):
     """groupBy raw spans (+ joined media pages) first, then decode +
-    assemble + extract in ONE pandas UDF per document — half the Arrow
-    crossings of the staged plan, one fewer UDF stage."""
-    from ..functions.udfs import make_fused_extractor_udf
-    from ..operators.assemble import MEDIA_KINDS
-
+    assemble + extract in ONE pandas UDF per document."""
     pt = options.passthrough_columns
     text_branch = spans.where(
         F.col("kind").isNull() | ~F.col("kind").isin(*MEDIA_KINDS)
@@ -226,23 +222,7 @@ def _fused_plan(spans: DataFrame, media: DataFrame | None, options: ExtractOptio
         F.lit(None).cast("array<string>").alias("pages"),
         F.lit(None).cast("array<string>").alias("ocr_pages"),
     )
-    media_branch = spans.where(F.col("kind").isin(*MEDIA_KINDS)).drop("text")
-    if options.spread_partitions:
-        media_branch = media_branch.repartition(
-            options.spread_partitions, "doc_id", "offset"
-        )
-    if media is not None:
-        media_side = F.broadcast(media) if options.broadcast_media else media
-        media_branch = media_branch.join(media_side, on="media_ref", how="left")
-    else:
-        media_branch = media_branch.withColumn(
-            "pages", F.lit(None).cast("array<string>")
-        ).withColumn("ocr_pages", F.lit(None).cast("array<string>"))
-    media_branch = media_branch.select(
-        "doc_id", *pt, "kind", F.lit(None).cast("string").alias("text"),
-        "media_ref", "offset", "pages", "ocr_pages",
-    )
-    unioned = text_branch.unionByName(media_branch)
+    unioned = text_branch.unionByName(_media_spans(spans, media, options))
 
     entry = F.when(
         F.col("kind").isNotNull(),
@@ -257,4 +237,4 @@ def _fused_plan(spans: DataFrame, media: DataFrame | None, options: ExtractOptio
 
     fused = make_fused_extractor_udf(options.config.to_json())
     result = grouped.select("doc_id", *pt, fused(F.col("raw_spans")).alias("r"))
-    return with_lineage(result.select(*_RESULT_COLUMNS(options)), options.run_id)
+    return _result_rows(result, options)

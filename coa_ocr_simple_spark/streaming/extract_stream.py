@@ -15,6 +15,8 @@ effectively-once output.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.schemas import DOCUMENTS
@@ -49,13 +51,7 @@ def run_streaming_extract(
         results = build_extract_plan(
             batch_df,
             media,
-            options=ExtractOptions(
-                config=opts.config,
-                spread_partitions=opts.spread_partitions,
-                broadcast_media=opts.broadcast_media,
-                include_full_text=opts.include_full_text,
-                run_id=f"{opts.run_id}-b{batch_id}",
-            ),
+            options=replace(opts, run_id=f"{opts.run_id}-b{batch_id}"),
             done=done,
         )
         io.append(results, output_path)

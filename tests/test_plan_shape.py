@@ -1,13 +1,19 @@
 """Plan-shape regression guards — the scale properties that must not rot:
-exactly one wide (groupBy) shuffle in the fused pipeline, a single
-ArrowEvalPython boundary, pruned document scans, and no second execution
-of the UDF subtree."""
+a shuffle-free fast branch, exactly one wide (groupBy) shuffle in the
+wide branch, one ArrowEvalPython boundary per branch, pruned document
+scans, and no second execution of the UDF subtree."""
 
 from __future__ import annotations
 
 import re
 
-from coa_ocr_simple_spark.plans.extract_plan import ExtractOptions, build_extract_plan
+from coa_ocr_simple_spark.plans.extract_plan import (
+    ExtractOptions,
+    _fastpath_plan,
+    _fused_plan,
+    build_extract_plan,
+    explode_spans,
+)
 
 
 def test_single_span_fastpath_never_shuffles(spark, tmp_path):
@@ -30,13 +36,16 @@ def test_single_span_fastpath_never_shuffles(spark, tmp_path):
     path = str(tmp_path / "simple.parquet")
     pq.write_table(pa.Table.from_pylist(docs, schema=DOCS_SCHEMA), path)
 
-    plan = build_extract_plan(
-        spark.read.parquet(path), None, options=ExtractOptions(run_id="fast")
-    )
-    s = plan._jdf.queryExecution().executedPlan().toString()
+    docs_df = spark.read.parquet(path)
+    options = ExtractOptions(run_id="fast")
     # the wide branch is empty but still planned; the FAST branch itself
     # must contain no exchange between its scan and its UDF — and the
     # whole job must still return every doc exactly once
+    fast = _fastpath_plan(docs_df, options)
+    s = fast._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in s, s
+
+    plan = build_extract_plan(docs_df, None, options=options)
     rows = plan.collect()
     assert len(rows) == 50
     assert {r["doc_id"] for r in rows} == {d["doc_id"] for d in docs}
@@ -101,13 +110,8 @@ def test_no_global_window_in_length_quantiles(spark):
 def test_fused_plan_shape(spark, parity_corpus):
     docs = spark.read.parquet(parity_corpus["docs_path"])
     media = spark.read.parquet(parity_corpus["media_path"])
-    plan = build_extract_plan(
-        docs,
-        media,
-        options=ExtractOptions(
-            spread_partitions=16, run_id="shape", single_span_fastpath=False
-        ),
-    )
+    options = ExtractOptions(spread_partitions=16, run_id="shape")
+    plan = _fused_plan(explode_spans(docs), media, options)
     s = plan._jdf.queryExecution().executedPlan().toString()
 
     # one Python boundary: the fused decode+assemble+extract UDF
@@ -129,6 +133,12 @@ def test_fused_plan_shape(spark, parity_corpus):
     # the UDF appears once in the plan tree -> its subtree cannot be
     # re-executed by a second consumer
     assert s.count("fused_udf") <= 1 or s.count("pythonUDF") <= 2
+
+    # the full default plan: one Python boundary per branch (fast + wide)
+    full = build_extract_plan(docs, media, options=options)
+    s = full._jdf.queryExecution().executedPlan().toString()
+    assert s.count("ArrowEvalPython") == 2, s
+    assert "BatchEvalPython" not in s
 
 
 def test_bpe_encode_corpus_plan_is_shuffle_free(spark):

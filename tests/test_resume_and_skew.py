@@ -7,8 +7,9 @@ full input; the final table must contain every doc exactly once and match
 a from-scratch run.
 
 Skew: one 200-media-span document among thin docs; the explicit
-(doc_id, offset) hash repartition must spread the fat doc's spans across
-partitions instead of leaving them on one.
+(doc_id, offset) hash repartition must spread the fat doc's media spans
+across partitions through the media join instead of leaving them on one.
+(The fat doc is still decoded in one UDF call after the groupBy.)
 """
 
 from __future__ import annotations
@@ -24,7 +25,11 @@ from coa_ocr_simple_spark.fixtures.generate import (
 import random
 
 from coa_ocr_simple_spark.jobs.extract import parse_args, run
-from coa_ocr_simple_spark.operators.assemble import decode_spans, explode_spans
+from coa_ocr_simple_spark.plans.extract_plan import (
+    ExtractOptions,
+    _media_spans,
+    explode_spans,
+)
 
 
 def _small_corpus(n: int) -> SpanBuilder:
@@ -283,12 +288,13 @@ def test_skew_spread_bounds_partition_load(spark, tmp_path):
     write_corpus(corpus, docs_path, media_path)
 
     docs = spark.read.parquet(docs_path)
-    spans = explode_spans(docs)
-    decoded = decode_spans(
-        spans, spark.read.parquet(media_path), spread_partitions=16
+    media_spans = _media_spans(
+        explode_spans(docs),
+        spark.read.parquet(media_path),
+        ExtractOptions(spread_partitions=16),
     )
     per_partition = (
-        decoded.where(F.col("doc_id") == "doc-fat")
+        media_spans.where(F.col("doc_id") == "doc-fat")
         .groupBy(F.spark_partition_id().alias("pid"))
         .count()
         .collect()

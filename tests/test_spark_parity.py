@@ -2,7 +2,8 @@
 pipeline's output equals the single-node oracle per document —
 
 - out_spans as ordered sequences of (kind, text, media_ref, offset), and
-- doc_type / confidence / entities / code lists / test_results / sections.
+- doc_type / confidence / entities / code lists / test_results / sections,
+- full_text when include_full_text is set.
 
 The oracle is a sequential run of coa_ocr_simple_spark.core; the pipeline
 runs the same functions inside pandas UDFs — so this test verifies the
@@ -31,18 +32,20 @@ def _oracle_rows(corpus) -> dict[str, dict]:
     return rows
 
 
-@pytest.fixture(scope="module", params=["fused", "staged"])
-def pipeline_rows(request, spark, parity_corpus):
+def _pipeline_rows(spark, parity_corpus, **options) -> dict[str, dict]:
     docs = spark.read.parquet(parity_corpus["docs_path"])
     media = spark.read.parquet(parity_corpus["media_path"])
     result = build_extract_plan(
         docs,
         media,
-        options=ExtractOptions(
-            spread_partitions=16, run_id="parity", fused=request.param == "fused"
-        ),
+        options=ExtractOptions(spread_partitions=16, run_id="parity", **options),
     )
     return {r["doc_id"]: r.asDict(recursive=True) for r in result.collect()}
+
+
+@pytest.fixture(scope="module", params=["fused"])
+def pipeline_rows(spark, parity_corpus):
+    return _pipeline_rows(spark, parity_corpus)
 
 
 def test_every_document_extracted_exactly_once(spark, parity_corpus, pipeline_rows):
@@ -83,3 +86,16 @@ def test_lineage_columns_present(pipeline_rows):
     for row in pipeline_rows.values():
         assert row["_run_id"] == "parity"
         assert isinstance(row["_partition_id"], int)
+
+
+def test_full_text_equals_oracle(spark, parity_corpus):
+    """include_full_text rebuilds the document text JVM-side from
+    out_spans; it must equal the oracle's assembled text for every doc."""
+    rows = _pipeline_rows(spark, parity_corpus, include_full_text=True)
+    expected = {
+        doc["doc_id"]: extract_document(
+            doc["doc_id"], doc["spans"], parity_corpus["lookup"], EMPTY_CONFIG
+        )["full_text"]
+        for doc in parity_corpus["builder"].docs
+    }
+    assert {d: r["full_text"] for d, r in rows.items()} == expected
