@@ -28,25 +28,21 @@ import argparse
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.observed import Observed
 from ..sources.tables import TableIO
 from . import _cli
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     io = TableIO(spark)
-    attrs = io.read(args.attributes)
-    kept = attrs.where(F.expr(args.where)).select("doc_id")
+    # the counts are observed on the write: no count() job of their own
+    attrs = Observed.rows(io.read(args.attributes), "n_attributes_rows")
+    docs = Observed.rows(io.read(args.input), "n_docs")
+    kept = attrs.df.where(F.expr(args.where)).select("doc_id")
+    curated = Observed.rows(docs.df.join(kept, "doc_id", "left_semi"), "n_kept")
+    io.overwrite(curated.df, args.output)
 
-    docs = io.read(args.input)
-    curated = docs.join(kept, "doc_id", "left_semi")
-    io.overwrite(curated, args.output)
-
-    summary = {
-        "n_attributes_rows": attrs.count(),
-        "n_docs": docs.count(),
-        "n_kept": io.read(args.output).count(),
-        "policy": args.where,
-    }
+    summary = {**attrs.values, **docs.values, **curated.values, "policy": args.where}
     if args.report:
         report = spark.createDataFrame(
             [(k, int(v)) for k, v in summary.items() if k != "policy"],

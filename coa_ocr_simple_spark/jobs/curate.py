@@ -7,24 +7,16 @@ funnel as a runnable job:
          exact n-gram Jaccard >= threshold drops the larger doc_id; or,
          with --cluster-reps, keeps one representative per connected
          component of the pair graph)
-      -> optional Naive-Bayes quality-classifier gate (--nb-quality,
-         trained on the survivors' own Gopher-labeled held-in slice)
-      -> optional quality-weighted soft sampling (--quality-sample,
-         keep-probability proportional to the classifier score)
-      -> optional Gopher A1.1 document-filter gate (--gopher-filter)
-      -> optional character-entropy gibberish gate (--entropy-filter)
-      -> optional CCNet-style bigram-LM perplexity gate
-         (--max-mille-bits)
-      -> optional DSIR importance-weight selection (--dsir-select)
-      -> optional ExactSubstr-style block-dup cut over the survivors
-         (--max-dup-block-pct)
-      -> optional water-filled source char-budget mixture
-         (--char-budget-div)
-      -> optional temperature language rebalancing (--lang-rebalance)
-      -> optional C4 line/page payload rewrite (--c4-clean)
-      -> optional CCNet corpus-level paragraph-dedup payload rewrite
-         (--dedup-paragraphs)
-      -> optional ExactSubstr span-cut payload rewrite (--cut-dup-spans)
+      -> the optional doc-set stages, in DOC_SET_STAGES order
+         (--nb-quality ... --lang-rebalance)
+      -> the optional payload rewrites, in REWRITES order (--c4-clean,
+         --dedup-paragraphs, --cut-dup-spans)
+      -> optional encoding scrub (--encoding-clean), then PII scrub
+         (--pii-scrub)
+
+The two tables are the only statement of the stage order: each entry
+holds the stage's flag, its count key and what it keeps, and the
+lineage cuts, counts and report rows all follow from them.
 
 Usage:
   python -m coa_ocr_simple_spark.jobs.curate \\
@@ -51,23 +43,211 @@ lineage cut that follows the rewrite).  --report adds the report write.
 from __future__ import annotations
 
 import argparse
+from typing import Callable, NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.observed import Observed
 from ..plans.driver_queries_dedup import _FUNNEL_JACCARD_MIN, curation_stages
+from ..plans.driver_queries_ext import paragraph_lang_profile
+from ..plans.driver_queries_mix import (
+    block_dedup_stats,
+    exact_substr_cut,
+    lang_mixture_sample,
+    paragraph_dedup,
+    token_budget_mixture,
+)
+from ..plans.driver_queries_quality import (
+    c4_line_clean,
+    ccnet_ppl_buckets,
+    char_entropy_stats,
+    dsir_importance,
+    gopher_quality_signals,
+    lm_perplexity,
+    quality_weighted_sample,
+    self_trained_nb_verdicts,
+)
 from ..sources.tables import TableIO
 from . import _cli
 
 
-# optional stages that read the survivor set on two branches
-_TWO_BRANCH_STAGES = (
-    "nb_quality", "quality_sample", "gopher_filter", "entropy_filter",
-    "max_mille_bits", "drop_mixed_lang", "drop_ppl_tail", "dsir_select",
-    "max_dup_block_pct", "char_budget_div", "lang_rebalance",
-    "c4_clean", "dedup_paragraphs", "cut_dup_spans",
+class DocSetStage(NamedTuple):
+    """An optional stage that narrows the survivor doc_id set: ``rows``
+    maps the survivors' payload rows (and the job args) to the doc_ids
+    ``how`` keeps (left_semi) or drops (left_anti); ``key`` names the
+    count of the set that is left."""
+
+    flag: str
+    key: str
+    how: str
+    rows: Callable[[DataFrame, argparse.Namespace], DataFrame]
+
+
+# the doc-set stages, in run order
+DOC_SET_STAGES = (
+    # model-based quality gate (the GPT-3/LLaMA classifier family): a
+    # hashed-feature Naive-Bayes classifier trained on the survivors'
+    # own Gopher-labelled slice scores every survivor.  Runs BEFORE
+    # --gopher-filter so the training labels still carry both classes;
+    # with one-class labels the verdicts skew all-positive (a graceful
+    # no-op, documented in --help).
+    DocSetStage(
+        "nb_quality", "n_after_nb_quality", "left_semi",
+        lambda s, a: self_trained_nb_verdicts(s).where(F.col("is_quality")),
+    ),
+    # soft variant of the classifier gate (GPT-3/DCLM sampling policy):
+    # each survivor is kept with probability proportional to its score
+    # (deterministic md5 coin, quality_weighted_sample ramp).  Same
+    # model, before --gopher-filter for the same reason.
+    DocSetStage(
+        "quality_sample", "n_after_quality_sample", "left_semi",
+        lambda s, a: quality_weighted_sample(self_trained_nb_verdicts(s))
+        .where(F.col("is_kept")),
+    ),
+    # Gopher Appendix-A1.1 document filters (mean word length, symbol
+    # ratio, bullet/ellipsis lines, alpha-word fraction): cheap per-doc
+    # heuristics, so they run before the heavier LM/block stages
+    DocSetStage(
+        "gopher_filter", "n_after_gopher", "left_anti",
+        lambda s, a: gopher_quality_signals(s).where(F.col("is_gopher_bad") == 1),
+    ),
+    # character-entropy gibberish gate: repeated-char / tiny-alphabet
+    # spew passes the word-level Gopher checks but collapses to < 2
+    # coarse bits/char.  Same cheap-heuristic tier as --gopher-filter.
+    DocSetStage(
+        "entropy_filter", "n_after_entropy", "left_anti",
+        lambda s, a: char_entropy_stats(s).where(F.col("is_low_entropy")),
+    ),
+    # CCNet-style perplexity gate: a bigram LM trained on the
+    # survivors' own held-in slice scores every doc; docs above the
+    # bits/bigram budget (or with no bigrams at all) drop
+    DocSetStage(
+        "max_mille_bits", "n_after_perplexity", "left_semi",
+        lambda s, a: lm_perplexity(s).where(
+            (F.col("n_bigrams") > 0) & (F.col("mille_bits") <= a.max_mille_bits)
+        ),
+    ),
+    # mixed-language documents (quoted sources, foreign boilerplate,
+    # code-switching) poison monolingual training mixes and defeat
+    # doc-level language routing: drop survivors whose paragraphs
+    # decide on more than one language
+    DocSetStage(
+        "drop_mixed_lang", "n_after_mixed_lang", "left_semi",
+        lambda s, a: paragraph_lang_profile(s).where(F.col("is_mixed") == 0),
+    ),
+    # CCNet's corpus split: tercile the survivors by LM perplexity and
+    # drop the tail.  Adaptive: the thresholds are the survivors' own
+    # order statistics (value-domain histogram, constant-bounded
+    # window; see ccnet_ppl_buckets).
+    DocSetStage(
+        "drop_ppl_tail", "n_after_ppl_tail", "left_semi",
+        lambda s, a: ccnet_ppl_buckets(s).where(F.col("ppl_bucket") < 2),
+    ),
+    # DSIR importance selection: hashed-n-gram importance weights
+    # against the held-in target slice; keep docs whose weight is
+    # strictly above the survivor mean (the deterministic stand-in for
+    # DSIR's top-k resample)
+    DocSetStage(
+        "dsir_select", "n_after_dsir", "left_semi",
+        lambda s, a: dsir_importance(s).where(F.col("is_selected")),
+    ),
+    # ExactSubstr-style pass over the SURVIVORS (post-dedup, where it
+    # belongs): drop docs whose droppable-block fraction exceeds the
+    # cap; docs too short for a full block have nothing to cut and pass
+    DocSetStage(
+        "max_dup_block_pct", "n_after_block_dedup", "left_anti",
+        lambda s, a: block_dedup_stats(s).where(
+            F.floor(F.col("n_drop_blocks") * 100 / F.col("n_blocks"))
+            > a.max_dup_block_pct
+        ),
+    ),
+    # water-filled source mixture: ship a 1/N fraction of the surviving
+    # char mass, allocated across sources by water-filling (small
+    # sources whole, big ones capped at a common level)
+    DocSetStage(
+        "char_budget_div", "n_after_char_budget", "left_semi",
+        lambda s, a: token_budget_mixture(s, budget_div=a.char_budget_div)
+        .where(F.col("is_kept")),
+    ),
+    # temperature language rebalancing: the last doc-set stage, so the
+    # mixture is computed over what actually ships
+    DocSetStage(
+        "lang_rebalance", "n_after_lang_rebalance", "left_semi",
+        lambda s, a: lang_mixture_sample(s, alpha=a.lang_alpha),
+    ),
 )
+
+
+class Rewrite(NamedTuple):
+    """An optional payload rewrite: ``rewrite`` maps the curated rows
+    (and the job args) to a frame carrying the new text in ``text_col``;
+    rows where ``keep()`` holds ship with it, the others drop, counted by
+    the ``dropped`` metric of ``metrics()``.  ``key`` names the count of
+    the docs left.  Columns are built lazily: F.col needs a session."""
+
+    flag: str
+    rewrite: Callable[[DataFrame, argparse.Namespace], DataFrame]
+    text_col: str
+    keep: Callable[[], Column]
+    metrics: Callable[[], dict[str, Column]]
+    dropped: str
+    key: str
+
+
+# the payload rewrites, in run order; each keeps n_chars in step with
+# the new text
+REWRITES = (
+    # C4 line/page cleaning (Raffel et al. 2020 s2.2): survivors keep
+    # only terminal-punctuated >= 3-word non-javascript lines; pages
+    # with < 5 kept lines, lorem ipsum, or curly braces drop entirely
+    Rewrite(
+        "c4_clean",
+        lambda c, a: c4_line_clean(c),
+        "text_clean",
+        lambda: ~F.col("is_dropped"),
+        lambda: {"n_c4_dropped_docs": F.sum(F.col("is_dropped").cast("long"))},
+        "n_c4_dropped_docs",
+        "n_after_c4",
+    ),
+    # CCNet-style corpus-level paragraph dedup: every non-canonical
+    # occurrence of a normalized paragraph across the WHOLE survivor set
+    # is removed; docs reduced to nothing (pure boilerplate) drop
+    Rewrite(
+        "dedup_paragraphs",
+        lambda c, a: paragraph_dedup(c),
+        "clean_text",
+        lambda: F.col("clean_text") != "",
+        lambda: {
+            "n_dup_paragraphs_cut": F.sum("n_dup_paragraphs"),
+            "n_paragraph_emptied_docs": F.sum((F.col("clean_text") == "").cast("long")),
+        },
+        "n_paragraph_emptied_docs",
+        "n_after_paragraph_dedup",
+    ),
+    # ExactSubstr CUT pass (Lee et al. 2022): survivors' text loses
+    # every corpus-duplicated >= w-token span (keep-first), fully-cut
+    # docs drop.  Whitespace runs inside surviving text are normalized
+    # to single spaces (the span family's tokenization contract).
+    Rewrite(
+        "cut_dup_spans",
+        lambda c, a: exact_substr_cut(c, w=a.cut_span_w),
+        "text_clean",
+        lambda: F.col("n_kept") > 0,
+        lambda: {
+            "n_tokens_cut": F.sum("n_cut"),
+            "n_fully_cut_docs": F.sum((F.col("n_kept") == 0).cast("long")),
+        },
+        "n_fully_cut_docs",
+        "n_after_span_cut",
+    ),
+)
+
+
+def _on(args: argparse.Namespace, flag: str) -> bool:
+    """A stage runs when its flag is set: ``--max-mille-bits 0`` too."""
+    value = getattr(args, flag)
+    return value is not None and value is not False
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
@@ -82,358 +262,62 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         "jaccard_min": args.jaccard_min,
         "near_dup_policy": "cluster_reps" if args.cluster_reps else "pair_loser",
     }
-    # every other count is an observed metric, read after the write;
-    # `live` names the count of the latest survivor set (n_curated)
+    # every other count is an observed metric, read after the write
     observed = list(stages.counts)
-    live = "n_curated"
 
     def _observe(df, **metrics):
         obs = Observed(df, **metrics)
         observed.append(obs)
         return obs.df
 
-    if any(
-        getattr(args, k) is not None and getattr(args, k) is not False
-        for k in _TWO_BRANCH_STAGES
-    ):
-        # the funnel's counts are observed inside its persisted sets, so
-        # the action that fills them must read `final` on one branch:
-        # this eager cut does, before a stage reads it on two
+    doc_sets = [s for s in DOC_SET_STAGES if _on(args, s.flag)]
+    rewrites = [r for r in REWRITES if _on(args, r.flag)]
+    if doc_sets or rewrites:
+        # every doc-set stage and rewrite reads the survivor set on two
+        # branches (the payload semi-join feeding its signal AND the
+        # survivor-set join).  The funnel's counts are observed inside
+        # its persisted sets, so the action that fills them must read
+        # `final` on one branch: this eager cut does, before a stage
+        # reads it on two.
         final = stages.final.localCheckpoint()
     else:
         final = stages.final.persist()
 
-    def _stage(prev, new_final, key):
-        """Advance the survivor set past one optional stage with an
-        EAGER lineage cut.  Every stage references the prior survivor
-        set twice (the payload semi-join feeding the signal AND the
-        survivor-set join), so chained stage plans compound 2^stages —
-        measured: four enabled stages OOMed a 4 GiB driver before any
-        task ran, just building the analyzed plan.  localCheckpoint
-        materializes the (tiny, doc_id-only) set in executor storage
-        like persist() but TRUNCATES the logical plan — the same cut
-        connected_components uses per pointer-jumping round.  A run
-        that must survive executor loss swaps in checkpoint(dir).
-        The checkpoint job is also the one that reports the stage
-        count, as an observed metric."""
-        nonlocal live
-        live = key
-        out = _observe(new_final, **{key: F.count(F.lit(1))}).localCheckpoint()
+    for stage in doc_sets:
+        # Advance the survivor set with an EAGER lineage cut: chained
+        # two-branch stage plans compound 2^stages (measured: four
+        # stages OOMed a 4 GiB driver before any task ran, just building
+        # the analyzed plan).  localCheckpoint materializes the (tiny,
+        # doc_id-only) set in executor storage like persist() but
+        # TRUNCATES the logical plan, the cut connected_components uses
+        # per pointer-jumping round; a run that must survive executor
+        # loss swaps in checkpoint(dir).  The checkpoint job is also the
+        # one that reports the stage count, as an observed metric.
+        rows = stage.rows(docs.join(final, "doc_id", "left_semi"), args)
+        prev = final
+        final = _observe(
+            final.join(rows.select("doc_id"), "doc_id", stage.how),
+            **{stage.key: F.count(F.lit(1))},
+        ).localCheckpoint()
         prev.unpersist()
-        return out
-
-    if args.nb_quality:
-        # Model-based quality gate (the GPT-3/LLaMA classifier family):
-        # a hashed-feature Naive-Bayes classifier is trained on the
-        # survivors' own doc_id % 10 == 2 slice labeled by the Gopher
-        # verdict, then scores every survivor.  Runs BEFORE the
-        # --gopher-filter stage so the training labels still carry
-        # both classes; if the slice labels are one-class the verdict
-        # skews all-positive (graceful no-op, documented in --help).
-        from ..plans.driver_queries_quality import (
-            _NB_TRAIN_MOD,
-            gopher_quality_signals,
-            nb_classifier_verdicts,
-        )
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        train = surv_docs.where(F.col("doc_id") % 10 == _NB_TRAIN_MOD)
-        lab = gopher_quality_signals(train).select(
-            "doc_id",
-            (F.col("is_gopher_bad") == 0).cast("long").alias("is_pos"),
-        )
-        kept = (
-            nb_classifier_verdicts(surv_docs, train, lab)
-            .where(F.col("is_quality"))
-            .select("doc_id")
-        )
-        final = _stage(
-            final,
-            final.join(kept, "doc_id", "left_semi"),
-            "n_after_nb_quality",
-        )
-
-    if args.quality_sample:
-        # Soft variant of the classifier gate (GPT-3/DCLM sampling
-        # policy): instead of a hard threshold, each survivor is kept
-        # with probability proportional to its classifier score
-        # (deterministic md5 coin, quality_weighted_sample ramp).
-        # Same trained model as --nb-quality; runs before
-        # --gopher-filter for the same both-classes-in-labels reason.
-        from ..plans.driver_queries_quality import (
-            _NB_TRAIN_MOD,
-            gopher_quality_signals,
-            nb_classifier_verdicts,
-            quality_weighted_sample,
-        )
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        train = surv_docs.where(F.col("doc_id") % 10 == _NB_TRAIN_MOD)
-        lab = gopher_quality_signals(train).select(
-            "doc_id",
-            (F.col("is_gopher_bad") == 0).cast("long").alias("is_pos"),
-        )
-        kept = (
-            quality_weighted_sample(
-                nb_classifier_verdicts(surv_docs, train, lab)
-            )
-            .where(F.col("is_kept"))
-            .select("doc_id")
-        )
-        final = _stage(
-            final,
-            final.join(kept, "doc_id", "left_semi"),
-            "n_after_quality_sample",
-        )
-
-    if args.gopher_filter:
-        # Gopher Appendix-A1.1 document filters over the survivors
-        # (mean word length, symbol ratio, bullet/ellipsis lines,
-        # alpha-word fraction) — cheap per-doc heuristics, so they run
-        # before the heavier LM/block stages.  doc_id-set plumbing.
-        from ..plans.driver_queries_quality import gopher_quality_signals
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        bad = (
-            gopher_quality_signals(surv_docs)
-            .where(F.col("is_gopher_bad") == 1)
-            .select("doc_id")
-        )
-        final = _stage(
-            final, final.join(bad, "doc_id", "left_anti"), "n_after_gopher"
-        )
-
-    if args.entropy_filter:
-        # character-entropy gibberish gate over the survivors: repeated-
-        # char / tiny-alphabet spew passes the word-level Gopher checks
-        # but collapses to < 2 coarse bits/char.  Same cheap-heuristic
-        # tier as --gopher-filter; doc_id-set plumbing.
-        from ..plans.driver_queries_quality import char_entropy_stats
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        low = (
-            char_entropy_stats(surv_docs)
-            .where(F.col("is_low_entropy"))
-            .select("doc_id")
-        )
-        final = _stage(
-            final, final.join(low, "doc_id", "left_anti"), "n_after_entropy"
-        )
-
-    if args.max_mille_bits is not None:
-        # CCNet-style perplexity gate over the survivors: a bigram LM
-        # trained on the survivors' own held-in slice scores every doc;
-        # docs above the bits/bigram budget (or with no bigrams at all)
-        # drop.  Same doc_id-set plumbing as every other stage.
-        from ..plans.driver_queries_quality import lm_perplexity
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        ppl = lm_perplexity(surv_docs)
-        kept = ppl.where(
-            (F.col("n_bigrams") > 0)
-            & (F.col("mille_bits") <= args.max_mille_bits)
-        ).select("doc_id")
-        final = _stage(
-            final, final.join(kept, "doc_id", "left_semi"), "n_after_perplexity"
-        )
-
-    if args.drop_mixed_lang:
-        # mixed-language documents (quoted sources, foreign boilerplate,
-        # code-switching) poison monolingual training mixes and defeat
-        # doc-level language routing — drop survivors whose paragraphs
-        # decide on more than one language.
-        from ..plans.driver_queries_ext import paragraph_lang_profile
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        kept = (
-            paragraph_lang_profile(surv_docs)
-            .where(F.col("is_mixed") == 0)
-            .select("doc_id")
-        )
-        final = _stage(
-            final,
-            final.join(kept, "doc_id", "left_semi"),
-            "n_after_mixed_lang",
-        )
-
-    if args.drop_ppl_tail:
-        # CCNet's actual corpus split: tercile the survivors by LM
-        # perplexity and drop the tail (head+middle ship).  Adaptive —
-        # no fixed bits budget to tune, the thresholds are the
-        # survivors' own order statistics (value-domain histogram,
-        # constant-bounded window; see ccnet_ppl_buckets).
-        from ..plans.driver_queries_quality import ccnet_ppl_buckets
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        kept = (
-            ccnet_ppl_buckets(surv_docs)
-            .where(F.col("ppl_bucket") < 2)
-            .select("doc_id")
-        )
-        final = _stage(
-            final, final.join(kept, "doc_id", "left_semi"), "n_after_ppl_tail"
-        )
-
-    if args.dsir_select:
-        # DSIR importance selection over the survivors: hashed-n-gram
-        # importance weights against the held-in target slice; keep only
-        # docs whose weight is strictly above the survivor mean (the
-        # deterministic stand-in for DSIR's top-k resample).
-        from ..plans.driver_queries_quality import dsir_importance
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        kept = (
-            dsir_importance(surv_docs)
-            .where(F.col("is_selected"))
-            .select("doc_id")
-        )
-        final = _stage(
-            final, final.join(kept, "doc_id", "left_semi"), "n_after_dsir"
-        )
-
-    if args.max_dup_block_pct is not None:
-        # ExactSubstr-style pass over the SURVIVORS (post-dedup, where it
-        # belongs): drop docs whose droppable-block fraction exceeds the
-        # cap.  Docs too short for a full block have nothing to cut and
-        # pass.  Still doc_id-set plumbing — payload moves once, at the
-        # final write.
-        from ..plans.driver_queries_mix import block_dedup_stats
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        stats = block_dedup_stats(surv_docs)
-        bad = stats.where(
-            F.floor(F.col("n_drop_blocks") * 100 / F.col("n_blocks"))
-            > args.max_dup_block_pct
-        ).select("doc_id")
-        final = _stage(
-            final, final.join(bad, "doc_id", "left_anti"), "n_after_block_dedup"
-        )
-
-    if args.char_budget_div is not None:
-        # water-filled source mixture over the survivors: ship a
-        # 1/N fraction of the surviving char mass, allocated across
-        # sources by water-filling (small sources whole, big ones
-        # capped at a common level) — the budget-constrained
-        # composition step of a corpus build.
-        from ..plans.driver_queries_mix import token_budget_mixture
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        kept = (
-            token_budget_mixture(
-                surv_docs, budget_div=args.char_budget_div
-            )
-            .where(F.col("is_kept"))
-            .select("doc_id")
-        )
-        final = _stage(
-            final,
-            final.join(kept, "doc_id", "left_semi"),
-            "n_after_char_budget",
-        )
-
-    if args.lang_rebalance:
-        # temperature (alpha=0.5) language rebalancing of the survivors —
-        # the last stage, so the mixture is computed over what actually
-        # ships
-        from ..plans.driver_queries_mix import lang_mixture_sample
-
-        surv_docs = docs.join(final, "doc_id", "left_semi")
-        kept = lang_mixture_sample(surv_docs, alpha=args.lang_alpha).select(
-            "doc_id"
-        )
-        final = _stage(
-            final,
-            final.join(kept, "doc_id", "left_semi"),
-            "n_after_lang_rebalance",
-        )
 
     curated = docs.join(final, "doc_id", "left_semi")
 
-    n_rewrites = sum(
-        [bool(args.c4_clean), bool(args.dedup_paragraphs),
-         bool(args.cut_dup_spans)]
-    )
-
-    def _cut(df):
-        """Lineage barrier between payload rewrites: each rewrite
-        consumes `curated` on TWO branches (the signal frame and the
-        join-back) with no cross-branch CSE, so k chained rewrites are
-        2^k recompute + plan growth without a cut.  Only pays when a
-        second rewrite follows — a single rewrite just double-scans the
-        parquet, which is cheaper than materializing the payload."""
-        return df.localCheckpoint() if n_rewrites >= 2 else df
-
-    if args.c4_clean:
-        curated = _cut(curated)
-        # C4 line/page cleaning (Raffel et al. 2020 s2.2): payload
-        # rewrite — survivors keep only terminal-punctuated >= 3-word
-        # non-javascript lines; pages with < 5 kept lines, lorem ipsum,
-        # or curly braces drop entirely.  n_chars tracks the new text.
-        from ..plans.driver_queries_quality import c4_line_clean
-
-        c4 = _observe(
-            c4_line_clean(curated),
-            n_c4_dropped_docs=F.sum(F.col("is_dropped").cast("long")),
-        )
+    for r in rewrites:
+        if len(rewrites) >= 2:
+            # lineage barrier: each rewrite consumes `curated` on TWO
+            # branches (the signal frame and the join-back) with no
+            # cross-branch CSE, so k chained rewrites are 2^k recompute
+            # + plan growth without a cut.  A single rewrite just
+            # double-scans the parquet, cheaper than materializing the
+            # payload.
+            curated = curated.localCheckpoint()
+        new = _observe(r.rewrite(curated, args), **r.metrics())
         curated = (
             curated.drop("text", "n_chars")
-            .join(
-                c4.where(~F.col("is_dropped")).select("doc_id", "text_clean"),
-                "doc_id",
-            )
-            .withColumn("n_chars", F.length("text_clean").cast("long"))
-            .withColumnRenamed("text_clean", "text")
-            .select(*docs.columns)
-        )
-
-    if args.dedup_paragraphs:
-        curated = _cut(curated)
-        # CCNet-style corpus-level paragraph dedup (payload rewrite):
-        # every non-canonical occurrence of a normalized paragraph
-        # across the WHOLE survivor set is removed; docs reduced to
-        # nothing (pure boilerplate) drop entirely.
-        from ..plans.driver_queries_mix import paragraph_dedup
-
-        pd = _observe(
-            paragraph_dedup(curated),
-            n_dup_paragraphs_cut=F.sum("n_dup_paragraphs"),
-            n_paragraph_emptied_docs=F.sum(
-                (F.col("clean_text") == "").cast("long")
-            ),
-        )
-        curated = (
-            curated.drop("text", "n_chars")
-            .join(
-                pd.where(F.col("clean_text") != "").select(
-                    "doc_id", "clean_text"
-                ),
-                "doc_id",
-            )
-            .withColumn("n_chars", F.length("clean_text").cast("long"))
-            .withColumnRenamed("clean_text", "text")
-            .select(*docs.columns)
-        )
-
-    if args.cut_dup_spans:
-        curated = _cut(curated)
-        # ExactSubstr CUT pass (Lee et al. 2022): the only stage that
-        # REWRITES payload — survivors' text loses every
-        # corpus-duplicated >= w-token span (keep-first), fully-cut
-        # docs drop, n_chars is refreshed to match the cleaned text.
-        # Whitespace runs inside surviving text are normalized to
-        # single spaces (the span family's tokenization contract).
-        from ..plans.driver_queries_mix import exact_substr_cut
-
-        cut = _observe(
-            exact_substr_cut(curated, w=args.cut_span_w),
-            n_tokens_cut=F.sum("n_cut"),
-            n_fully_cut_docs=F.sum((F.col("n_kept") == 0).cast("long")),
-        )
-        curated = (
-            curated.drop("text", "n_chars")
-            .join(cut.where(F.col("n_kept") > 0), "doc_id")
-            .withColumn("n_chars", F.length("text_clean").cast("long"))
-            .withColumnRenamed("text_clean", "text")
+            .join(new.where(r.keep()).select("doc_id", r.text_col), "doc_id")
+            .withColumn("n_chars", F.length(r.text_col).cast("long"))
+            .withColumnRenamed(r.text_col, "text")
             .select(*docs.columns)
         )
 
@@ -482,15 +366,12 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     io.append(curated, args.output)
     for obs in observed:
         summary.update(obs.values)
+    # n_curated is the count of the last survivor set
+    live = doc_sets[-1].key if doc_sets else "n_curated"
     summary["n_curated"] = n_live = summary[live]
-    for dropped, after in (
-        ("n_c4_dropped_docs", "n_after_c4"),
-        ("n_paragraph_emptied_docs", "n_after_paragraph_dedup"),
-        ("n_fully_cut_docs", "n_after_span_cut"),
-    ):
-        if dropped in summary:  # payload rewrites, in the order they ran
-            n_live -= summary[dropped]
-            summary[after] = n_live
+    for r in rewrites:  # in the order they ran
+        n_live -= summary[r.dropped]
+        summary[r.key] = n_live
     if args.report:
         report = spark.createDataFrame(
             [

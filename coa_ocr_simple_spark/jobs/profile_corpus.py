@@ -15,7 +15,7 @@ Signals (all integer-exact, each also an oracle-checked query):
                               attributes only, payload stays put)
   lm_    lm_perplexity        CCNet-style bigram-LM bits
   dsir_  dsir_importance      DSIR hashed n-gram importance weight
-  nb_    nb_classifier_verdicts  Naive-Bayes classifier llr + verdict
+  nb_    self_trained_nb_verdicts  Naive-Bayes classifier llr + verdict
                               (trained on the corpus's own Gopher-
                               labeled doc_id%10 slice, as in curate)
   ent_   char_entropy_stats   character-entropy gibberish gate
@@ -50,35 +50,19 @@ from . import _cli
 
 
 def _signal_frames() -> dict[str, Callable[[DataFrame], DataFrame]]:
-    from ..plans.driver_queries_ext import language_quality
+    from ..plans.driver_queries_corpus import encoding_artifact_stats, nfc_stats
+    from ..plans.driver_queries_ext import language_quality, paragraph_lang_profile
     from ..plans.driver_queries_quality import (
-        _NB_TRAIN_MOD,
         c4_line_clean,
+        ccnet_ppl_buckets,
         char_entropy_stats,
         dsir_importance,
         gopher_quality_signals,
         lm_perplexity,
-        nb_classifier_verdicts,
         ngram_repetition_stats,
         repetition_stats,
+        self_trained_nb_verdicts,
     )
-
-    def _nb(d: DataFrame) -> DataFrame:
-        # self-trained classifier, exactly the curate --nb-quality
-        # construction: Gopher-labeled held-in slice -> NB verdicts
-        train = d.where(F.col("doc_id") % 10 == _NB_TRAIN_MOD)
-        lab = gopher_quality_signals(train).select(
-            "doc_id",
-            (F.col("is_gopher_bad") == 0).cast("long").alias("is_pos"),
-        )
-        return nb_classifier_verdicts(d, train, lab)
-
-    from ..plans.driver_queries_corpus import (
-        encoding_artifact_stats,
-        nfc_stats,
-    )
-    from ..plans.driver_queries_ext import paragraph_lang_profile
-    from ..plans.driver_queries_quality import ccnet_ppl_buckets
 
     return {
         "lq": language_quality,
@@ -88,7 +72,8 @@ def _signal_frames() -> dict[str, Callable[[DataFrame], DataFrame]]:
         "c4": lambda d: c4_line_clean(d).drop("text_clean"),
         "lm": lm_perplexity,
         "dsir": dsir_importance,
-        "nb": _nb,
+        # self-trained classifier, the curate --nb-quality construction
+        "nb": self_trained_nb_verdicts,
         "ent": char_entropy_stats,
         # corpus-relative tercile label (0=head, 1=middle, 2=tail);
         # mille_bits itself already rides the lm_ columns

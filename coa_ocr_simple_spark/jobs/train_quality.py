@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..plans.driver_queries_quality import (
     _NB_TRAIN_MOD,
-    gopher_quality_signals,
+    gopher_labels,
     nb_model,
     nb_score,
 )
@@ -44,10 +44,7 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     io = TableIO(spark)
     docs = io.read(args.input)
     train = docs.where(F.col("doc_id") % 10 == args.train_mod)
-    lab = gopher_quality_signals(train).select(
-        "doc_id",
-        (F.col("is_gopher_bad") == 0).cast("long").alias("is_pos"),
-    )
+    lab = gopher_labels(train)
     split = lab.agg(
         F.count(F.lit(1)).alias("n"), F.sum("is_pos").alias("n_pos")
     ).collect()[0]

@@ -1725,13 +1725,25 @@ def nb_quality_classifier(docs: DataFrame) -> DataFrame:
     never sees doc_id, only hashed text features).  The math and scale
     shape live in nb_classifier_verdicts (shared with the curate job's
     --nb-quality stage)."""
-    nbd = _nb_docs(docs)
-    train = nbd.where(F.col("doc_id") % 10 == _NB_TRAIN_MOD)
-    lab = gopher_quality_signals(train).select(
+    return self_trained_nb_verdicts(_nb_docs(docs))
+
+
+def gopher_labels(train: DataFrame) -> DataFrame:
+    """(doc_id, is_pos): the classifier's training labels, distilled
+    from the Gopher composite verdict (pos = not gopher-bad)."""
+    return gopher_quality_signals(train).select(
         "doc_id",
         (F.col("is_gopher_bad") == 0).cast("long").alias("is_pos"),
     )
-    return nb_classifier_verdicts(nbd, train, lab)
+
+
+def self_trained_nb_verdicts(docs: DataFrame) -> DataFrame:
+    """nb_classifier_verdicts of every (doc_id, text) row of ``docs`` by
+    a classifier trained on their own Gopher-labelled doc_id % 10 ==
+    _NB_TRAIN_MOD slice — the curate --nb-quality / --quality-sample
+    and profile_corpus ``nb`` construction."""
+    train = docs.where(F.col("doc_id") % 10 == _NB_TRAIN_MOD)
+    return nb_classifier_verdicts(docs, train, gopher_labels(train))
 
 
 def nb_classifier_verdicts(

@@ -166,3 +166,35 @@ def test_policy_over_tercile_and_hygiene_signals(spark, tmp_path, profiled):
     assert all(attrs[d]["nfc_is_changed"] == 0 for d in attrs)
     # the tercile is a real split on this corpus, not a constant
     assert 0 < len(expected) < len(attrs)
+
+
+def test_policy_counts_come_from_the_write(spark, tmp_path, profiled, job_and_action_counts):
+    """The summary counts are observed on the one write the job runs:
+    they equal explicit count()s, and a run without --report is one SQL
+    action.  Reading them with three count() jobs after the write (one a
+    re-read of the output) made it 4 actions."""
+    docs_path, attrs_path = profiled
+    out = str(tmp_path / "counted")
+    where = "gq_is_gopher_bad = 0 AND lq_is_quality"
+    result = {}
+
+    def _run():
+        result["summary"] = run(
+            parse_args(
+                ["--input", docs_path, "--attributes", attrs_path,
+                 "--where", where, "--output", out]
+            ),
+            spark,
+        )
+
+    spark.catalog.clearCache()
+    n_jobs, n_actions = job_and_action_counts(_run)
+    attrs = spark.read.parquet(attrs_path)
+    assert result["summary"] == {
+        "n_attributes_rows": attrs.count(),
+        "n_docs": spark.read.parquet(docs_path).count(),
+        "n_kept": spark.read.parquet(out).count(),
+        "policy": where,
+    }
+    assert result["summary"]["n_kept"] == attrs.where(where).count() < 40
+    assert n_actions == 1, (n_jobs, n_actions)

@@ -850,6 +850,23 @@ def test_default_curate_run_action_and_job_budget(spark, tmp_path, job_and_actio
     assert n_actions == 3
 
 
+def test_optional_stage_curate_run_action_budget(spark, tmp_path, job_and_action_counts):
+    """One doc-set stage and two payload rewrites: 9 SQL actions, the
+    count measured when each stage was a hand-written block.  Driving
+    the stages from tables must add no action.  Besides the three
+    default actions they are the lineage cut, the Gopher checkpoint, the
+    two rewrite cuts and two Observed re-counts: C4 drops every
+    single-line page of this corpus, so AQE prunes the rewrites'
+    observed branches."""
+    path = _corpus(tmp_path)
+    flags = ["--gopher-filter", "--c4-clean", "--dedup-paragraphs"]
+    spark.catalog.clearCache()
+    n_jobs, n_actions = job_and_action_counts(
+        lambda: run(parse_args(["--input", path, "--output", str(tmp_path / "o")] + flags), spark)
+    )
+    assert n_actions == 9, (n_jobs, n_actions)
+
+
 def _write_docs(tmp_path, rows, name):
     schema = pa.schema(
         [("doc_id", pa.int64()), ("text", pa.string()), ("lang", pa.string()),
@@ -900,3 +917,31 @@ def test_c4_dropping_every_survivor_still_counts_them(spark, tmp_path):
     assert summary["n_curated"] == summary["n_c4_dropped_docs"] == 20
     assert summary["n_after_c4"] == 0
     assert spark.read.parquet(out).count() == 0
+
+
+def test_every_curate_flag_is_a_table_stage_or_a_known_arg():
+    """JVM-free wiring check: each option of the job is a doc-set table
+    stage, a payload-rewrite table stage, one of the two stateless
+    scrubs, or a known non-stage argument.  A new flag without a table
+    entry (or a table entry without its flag) fails here."""
+    import argparse
+
+    from coa_ocr_simple_spark.jobs import _cli
+    from coa_ocr_simple_spark.jobs.curate import DOC_SET_STAGES, REWRITES
+
+    session = argparse.ArgumentParser()
+    _cli.add_session_args(session)
+    known = {"input", "output", "report", "jaccard_min", "cluster_reps",
+             "cut_span_w", "lang_alpha"} | set(vars(session.parse_args([])))
+    groups = [
+        [s.flag for s in DOC_SET_STAGES],
+        [r.flag for r in REWRITES],
+        ["encoding_clean", "pii_scrub"],
+        sorted(known),
+    ]
+    flat = [dest for g in groups for dest in g]
+    assert len(flat) == len(set(flat)), "a dest sits in two groups"
+    assert set(flat) == set(vars(parse_args(["--input", "i", "--output", "o"])))
+    keys = [s.key for s in DOC_SET_STAGES] + [r.key for r in REWRITES]
+    assert len(keys) == len(set(keys)) and all(k.startswith("n_after_") for k in keys)
+    assert {s.how for s in DOC_SET_STAGES} == {"left_semi", "left_anti"}
