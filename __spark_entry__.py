@@ -7,7 +7,7 @@
                 spans resolved through an on-the-fly media store).
 ``queries``   — one entry per implemented operator family (SURVEY.md §2 +
                 net-new training-data ops); each runs the engine's real
-                path (pandas UDFs over coa_ocr_simple_spark.core, or pure
+                path (Arrow UDFs over coa_ocr_simple_spark.core, or pure
                 DataFrame ops).
 ``oracle_sql``— DuckDB-equivalent SQL for every query (validated locally
                 via scripts/check_oracles.py with the driver's compare

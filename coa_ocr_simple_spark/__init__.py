@@ -3,7 +3,7 @@ the document-extraction capabilities of pbrose82/coa-ocr-simple.
 
 Layout (SURVEY.md §7):
 - ``core``      pure-Python frozen reference semantics (also the test oracle)
-- ``functions`` pandas/Arrow UDF factories + Spark schemas
+- ``functions`` the Arrow UDF factory + Spark schemas
 - ``operators`` span assembly, skew salting, checkpoint/resume, dedup, text ops
 - ``sources``   table readers/writers (Iceberg when available, Parquet fallback)
 - ``plans``     end-to-end DataFrame plan builders

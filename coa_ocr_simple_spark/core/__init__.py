@@ -1,7 +1,7 @@
 """Pure-Python frozen reference semantics — zero Spark dependencies.
 
 One implementation, used twice (SURVEY.md §7.1): these functions ARE the
-single-node oracle in tests, and the extractor/decoder pandas UDFs call
+single-node oracle in tests, and the extractor/decoder Arrow UDFs call
 exactly them on the executors.
 """
 

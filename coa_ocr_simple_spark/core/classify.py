@@ -6,7 +6,7 @@ Parity target: /root/reference/ai_document_processor.py:233-267
 when ``transformers`` is importable, which it deliberately is not here.
 
 Pure function — no Spark imports.  Called both by the single-node oracle
-and (vectorized over a pandas batch) by the extractor pandas UDF.
+and (over each Arrow batch) by the extractor Arrow UDF.
 """
 
 from __future__ import annotations

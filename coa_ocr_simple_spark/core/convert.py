@@ -1,7 +1,7 @@
 """Result-dict -> output-table-row conversion.
 
 One conversion, used by BOTH the single-node oracle (tests) and the
-extractor pandas UDF (pipeline), so the table boundary cannot drift
+extractor Arrow UDF (pipeline), so the table boundary cannot drift
 between them.  Canonical output schema (SURVEY.md §1.3):
 
   doc_type string, confidence double,

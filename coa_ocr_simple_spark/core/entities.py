@@ -8,7 +8,7 @@ Parity targets in /root/reference/ai_document_processor.py:
 - ``extract_entities_with_patterns`` ai:1193-1215 (trained-pattern pass)
 
 All pure Python over one document string + a frozen ModelConfig — shared
-verbatim by the single-node oracle and the extractor pandas UDF.
+verbatim by the single-node oracle and the extractor Arrow UDF.
 
 Canonicalization (SURVEY.md §4.3.2): the reference materializes
 ``hazard_codes``/``cas_numbers`` via ``list(set(...))`` whose order is
@@ -54,7 +54,7 @@ def _rx(pattern: str):
     Python's builtin re cache tops out at 512 entries and pays a
     per-call args-parse; the extraction banks + discovery patterns are hot
     enough (dozens of searches per document at 10^12 docs) that the
-    explicit cache is a measurable win inside the pandas UDFs."""
+    explicit cache is a measurable win inside the Arrow UDFs."""
     return re.compile(pattern)
 
 

@@ -7,7 +7,7 @@ mid-run state mutation; auto-training is an offline job — training.py).
 ``extract_document`` is the full span-level oracle: decode every span of
 one document (text pass-through, HTML boilerplate strip, PDF/image media
 decode), assemble the document text, run ``process_document``.  The Spark
-pipeline calls exactly these functions from inside pandas UDFs, so the
+pipeline calls exactly these functions from inside Arrow UDFs, so the
 pytest parity check (out_spans + entities equality) verifies the
 *distributed plumbing* — ordering, grouping, decode joins — against this
 sequential reference run.

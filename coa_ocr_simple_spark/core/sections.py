@@ -3,7 +3,7 @@
 Parity target: /root/reference/ai_document_processor.py:269-384
 (``extract_sections``).  This is a *within-row* computation (SURVEY.md
 §2.4): the only "sort" is over heading positions inside one string, so it
-lives in pure Python and runs inside the extractor pandas UDF, never as a
+lives in pure Python and runs inside the extractor Arrow UDF, never as a
 Spark-level sort.
 """
 

@@ -12,7 +12,7 @@ real bytes with exactly the reference's constants —
 
 Page caps/headers/acceptance gate stay in core.decode — an engine only
 returns raw per-page strings, so parity semantics are engine-independent
-(SURVEY.md §4.3.6).  Use from a pandas UDF with the Iterator
+(SURVEY.md §4.3.6).  Use from an Arrow UDF with the Iterator
 form so engine initialization amortizes per worker.
 """
 

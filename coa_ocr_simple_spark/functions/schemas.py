@@ -48,7 +48,7 @@ SECTION = StructType(
     [StructField("title", StringType()), StructField("content", StringType())]
 )
 
-# extractor pandas-UDF return struct (core/convert.py result_to_row)
+# extractor Arrow-UDF return struct (core/convert.py result_to_row)
 EXTRACT_RESULT = StructType(
     [
         StructField("doc_type", StringType()),

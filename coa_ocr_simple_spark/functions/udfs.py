@@ -1,32 +1,54 @@
-"""Vectorized pandas/Arrow UDF factory — the ONLY Python that runs on
-executors.  No per-row Python UDFs anywhere (BASELINE.json input_hint).
+"""Vectorized Arrow UDF factory — the ONLY Python that runs on executors.
+No row-at-a-time Python UDFs anywhere (BASELINE.json input_hint).
 
-The UDF uses the ``Iterator`` form so per-worker setup (model-config
-parse, regex compilation via module import) is amortized across Arrow
-batches and, with reused Python workers, across tasks — the idiomatic
-equivalent of the reference's lazy singleton init
-(/root/reference/ai_document_processor.py:190-202; SURVEY.md §4.1).
+``row_udf`` is the one shape every core-calling UDF of the package takes:
+a per-row Python function plus its Spark return type, run over whole
+Arrow batches.  Each batch goes Arrow -> Python values -> Arrow, with the
+result array built once at the declared Arrow type; no pandas frame sits
+in between.  The UDF uses the ``Iterator`` form, so per-worker setup
+(model-config parse, regex compilation via module import) is amortized
+across Arrow batches and, with reused Python workers, across tasks — the
+idiomatic equivalent of the reference's lazy singleton init
+(reference ai_document_processor.py:190-202; SURVEY.md §4.1).
 Per-TASK setup is not amortized: every task re-reads its command and
 calls ``importlib.invalidate_caches()``.  On Python < 3.12 that re-parses
 every zip archive on the worker's path, except the unchanged ones that
 ``_worker_imports`` (installed on package import) lets skip the re-read.
 
-The UDF delegates to ``coa_ocr_simple_spark.core`` — the same functions
-the test oracle runs single-node, so oracle ≡ pipeline by construction.
+The extractor UDF delegates to ``coa_ocr_simple_spark.core`` — the same
+functions the test oracle runs single-node, so oracle ≡ pipeline by
+construction.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from functools import lru_cache
+from typing import Any
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, DataType, IntegerType, StructField, StructType
 
 from ..core import ModelConfig, extract_document
 from ..core.convert import result_to_row
 from .schemas import EXTRACT_RESULT, SPAN
+
+
+def row_udf(return_type: DataType, fn: Callable[[Any], Any]):
+    """An Arrow UDF of one column that returns ``[fn(v) for v in batch]``
+    for each Arrow batch, nulls included, typed as ``return_type``.
+    Struct results are dicts (keys outside the struct are ignored), maps
+    are dicts (insertion order kept).  The UDF carries ``fn``'s name."""
+    arrow_type = to_arrow_type(return_type)
+
+    def udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for arr in batches:
+            yield pa.array([fn(v) for v in arr.to_pylist()], type=arrow_type)
+
+    udf.__name__ = udf.__qualname__ = fn.__name__
+    return arrow_udf(udf, return_type)
 
 
 @lru_cache(maxsize=8)
@@ -50,38 +72,22 @@ def make_fused_extractor_udf(config_json: str):
         + [StructField("n_spans", IntegerType())]
     )
 
-    @pandas_udf(schema)
-    def fused_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        config = _config_from_json(config_json)
-        columns = [f.name for f in schema.fields]
-        for span_lists in batches:
-            rows = []
-            for raw in span_lists:
-                spans = []
-                pages_by_ref = {}
-                for s in raw if raw is not None else []:
-                    if s is None or s.get("kind") is None:
-                        continue
-                    spans.append(
-                        {
-                            "kind": s["kind"],
-                            "text": s["text"],
-                            "media_ref": s["media_ref"],
-                            "offset": s["offset"],
-                        }
-                    )
-                    if s["media_ref"] is not None:
-                        pages_by_ref[s["media_ref"]] = (
-                            list(s["pages"]) if s["pages"] is not None else [],
-                            list(s["ocr_pages"]) if s["ocr_pages"] is not None else [],
-                        )
-                oracle = extract_document(
-                    "", spans, lambda ref: pages_by_ref.get(ref, ([], [])), config
-                )
-                row = result_to_row(oracle)
-                row["out_spans"] = oracle["out_spans"]
-                row["n_spans"] = len(oracle["out_spans"])
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=columns)
+    def fused_extract(raw_spans: list[dict] | None) -> dict:
+        spans = [s for s in raw_spans or [] if s is not None and s["kind"] is not None]
+        pages_by_ref = {
+            s["media_ref"]: (s["pages"] or [], s["ocr_pages"] or [])
+            for s in spans
+            if s["media_ref"] is not None
+        }
+        oracle = extract_document(
+            "",
+            spans,
+            lambda ref: pages_by_ref.get(ref, ([], [])),
+            _config_from_json(config_json),
+        )
+        row = result_to_row(oracle)
+        row["out_spans"] = oracle["out_spans"]
+        row["n_spans"] = len(oracle["out_spans"])
+        return row
 
-    return fused_udf
+    return row_udf(schema, fused_extract)

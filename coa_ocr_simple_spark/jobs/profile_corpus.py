@@ -22,7 +22,7 @@ Signals (all integer-exact, each also an oracle-checked query):
   ppl_   ccnet_ppl_buckets    CCNet perplexity tercile (0/1/2 =
                               head/middle/tail; corpus-relative)
   enc_   encoding_artifact_stats  mojibake / U+FFFD / C0 counts
-  nfc_   nfc_stats            NFC canonicalization delta (pandas UDF)
+  nfc_   nfc_stats            NFC canonicalization delta (Arrow UDF)
   plang_ paragraph_lang_profile  per-paragraph language mixture
 
 Usage:

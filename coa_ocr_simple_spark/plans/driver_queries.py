@@ -4,7 +4,7 @@ Each entry here is one operator family from SURVEY.md §2 (or a net-new
 training-data-pipeline operator) expressed twice:
 
 - ``QUERIES[name](spark, sf_dir)`` — the Spark implementation, exercising
-  the engine's real path (pandas UDFs calling coa_ocr_simple_spark.core
+  the engine's real path (Arrow UDFs calling coa_ocr_simple_spark.core
   for extraction semantics; pure DataFrame ops for relational/dedup/text
   ops);
 - ``ORACLES[name]`` — ANSI/DuckDB SQL over the same parquet views.
@@ -20,12 +20,8 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -45,6 +41,7 @@ from ..core.patterns import (
     SDS_CLASS_PATTERNS,
     TDS_CLASS_PATTERNS,
 )
+from ..functions.udfs import row_udf
 
 
 def _spread(df: DataFrame, path: str) -> DataFrame:
@@ -110,14 +107,12 @@ _CLASSIFY_SCHEMA = StructType(
 )
 
 
-@pandas_udf(_CLASSIFY_SCHEMA)
-def _classify_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for texts in batches:
-        rows = []
-        for t in texts:
-            doc_type, conf = classify(t if t is not None else "")
-            rows.append({"doc_type": doc_type, "confidence_pct": round(conf * 100)})
-        yield pd.DataFrame(rows, columns=["doc_type", "confidence_pct"])
+def _classify(t: str | None) -> dict:
+    doc_type, conf = classify(t if t is not None else "")
+    return {"doc_type": doc_type, "confidence_pct": round(conf * 100)}
+
+
+_classify_udf = row_udf(_CLASSIFY_SCHEMA, _classify)
 
 
 def q_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,23 +170,17 @@ _FIELDS_SCHEMA = StructType(
 )
 
 
-@pandas_udf(_FIELDS_SCHEMA)
-def _fields_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for texts in batches:
-        rows = []
-        for t in texts:
-            t = t if t is not None else ""
-            rows.append(
-                {
-                    "product_name": _first_match(t, PRODUCT_NAME_PATTERNS),
-                    "batch_number": _first_match(t, COA_BATCH_PATTERNS),
-                    "cas_number": _first_match(t, COA_CAS_PATTERNS),
-                    "purity": _first_match(t, COA_PURITY_PATTERNS),
-                }
-            )
-        yield pd.DataFrame(
-            rows, columns=["product_name", "batch_number", "cas_number", "purity"]
-        )
+def _fields(t: str | None) -> dict:
+    t = t if t is not None else ""
+    return {
+        "product_name": _first_match(t, PRODUCT_NAME_PATTERNS),
+        "batch_number": _first_match(t, COA_BATCH_PATTERNS),
+        "cas_number": _first_match(t, COA_CAS_PATTERNS),
+        "purity": _first_match(t, COA_PURITY_PATTERNS),
+    }
+
+
+_fields_udf = row_udf(_FIELDS_SCHEMA, _fields)
 
 
 def q_extract_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,12 +335,11 @@ FROM toks
 # --- document fingerprint (SURVEY §2.6 D2) -------------------------------------------
 
 
-@pandas_udf(StringType())
-def _fingerprint_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for texts in batches:
-        yield pd.Series(
-            [document_fingerprint(t) if t else "" for t in texts], dtype="object"
-        )
+def _fingerprint(t: str | None) -> str:
+    return document_fingerprint(t) if t else ""
+
+
+_fingerprint_udf = row_udf(StringType(), _fingerprint)
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,7 +17,7 @@ projection the DuckDB oracle can reproduce exactly:
   comma-joined strings through the REAL extract_entities path
   (ai:399-418; set-order canonicalized per SURVEY §4.3.2).
 
-The Spark side runs the engine's actual core functions inside pandas
+The Spark side runs the engine's actual core functions inside Arrow
 UDFs; the SQL reimplements the same semantics in DuckDB.  Every regex
 involved stays inside the RE2 ∩ Python-re common subset already used by
 ``extract_fields``/``classify_documents``; where Python-only semantics
@@ -27,12 +27,8 @@ projection exposes names/counts instead of raw content.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -76,6 +72,7 @@ from ..core.patterns import (
 )
 from ..core.sections import extract_sections
 from ..core.tables import extract_test_results, rows_from_test_results
+from ..functions.udfs import row_udf
 from .driver_queries import _classify_oracle_sql, _docs
 
 _DEFAULT_CONFIG = ModelConfig()
@@ -209,15 +206,11 @@ _TABLE_ROWS_SCHEMA = ArrayType(
 )
 
 
-@pandas_udf(_TABLE_ROWS_SCHEMA)
-def _table_rows_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for texts in batches:
-        yield pd.Series(
-            [
-                rows_from_test_results(extract_test_results(t or ""))
-                for t in texts
-            ]
-        )
+def _table_rows(t: str | None) -> list[dict]:
+    return rows_from_test_results(extract_test_results(t or ""))
+
+
+_table_rows_udf = row_udf(_TABLE_ROWS_SCHEMA, _table_rows)
 
 
 def q_table_parse_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,22 +322,18 @@ _SECTIONS_SCHEMA = StructType(
 )
 
 
-@pandas_udf(_SECTIONS_SCHEMA)
-def _sections_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for texts in batches:
-        rows = []
-        for t in texts:
-            t = t or ""
-            doc_type, _ = classify(t)
-            secs = extract_sections(t, doc_type)
-            rows.append(
-                {
-                    "doc_type": doc_type,
-                    "n_sections": len(secs),
-                    "section_names": ",".join(sorted(secs.keys())),
-                }
-            )
-        yield pd.DataFrame(rows, columns=["doc_type", "n_sections", "section_names"])
+def _sections(t: str | None) -> dict:
+    t = t or ""
+    doc_type, _ = classify(t)
+    secs = extract_sections(t, doc_type)
+    return {
+        "doc_type": doc_type,
+        "n_sections": len(secs),
+        "section_names": ",".join(sorted(secs.keys())),
+    }
+
+
+_sections_udf = row_udf(_SECTIONS_SCHEMA, _sections)
 
 
 def q_section_names(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,19 +408,12 @@ _DISCOVERY_SCHEMA = StructType(
 )
 
 
-@pandas_udf(_DISCOVERY_SCHEMA)
-def _discovery_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for texts in batches:
-        rows = []
-        for t in texts:
-            keys = discover_fields(t or "", "", frozenset()).keys()
-            rows.append(
-                {
-                    "n_discovered": len(keys),
-                    "discovered_keys": ",".join(sorted(keys)),
-                }
-            )
-        yield pd.DataFrame(rows, columns=["n_discovered", "discovered_keys"])
+def _discovery(t: str | None) -> dict:
+    keys = discover_fields(t or "", "", frozenset()).keys()
+    return {"n_discovered": len(keys), "discovered_keys": ",".join(sorted(keys))}
+
+
+_discovery_udf = row_udf(_DISCOVERY_SCHEMA, _discovery)
 
 
 def q_discovered_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -527,22 +509,18 @@ _SDS_ARRAYS_SCHEMA = StructType(
 )
 
 
-@pandas_udf(_SDS_ARRAYS_SCHEMA)
-def _sds_arrays_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for texts in batches:
-        rows = []
-        for t in texts:
-            t = t or ""
-            doc_type, _ = classify(t)
-            ents = extract_entities(t, doc_type, _DEFAULT_CONFIG)
-            rows.append(
-                {
-                    "doc_type": doc_type,
-                    "hazard_codes": ",".join(ents.get("hazard_codes", [])),
-                    "cas_numbers": ",".join(ents.get("cas_numbers", [])),
-                }
-            )
-        yield pd.DataFrame(rows, columns=["doc_type", "hazard_codes", "cas_numbers"])
+def _sds_arrays(t: str | None) -> dict:
+    t = t or ""
+    doc_type, _ = classify(t)
+    ents = extract_entities(t, doc_type, _DEFAULT_CONFIG)
+    return {
+        "doc_type": doc_type,
+        "hazard_codes": ",".join(ents.get("hazard_codes", [])),
+        "cas_numbers": ",".join(ents.get("cas_numbers", [])),
+    }
+
+
+_sds_arrays_udf = row_udf(_SDS_ARRAYS_SCHEMA, _sds_arrays)
 
 
 def q_sds_entity_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -600,28 +578,21 @@ _ENTITY_COUNTS_SCHEMA = StructType(
 _NON_SCALAR_KEYS = ("hazard_codes", "cas_numbers", "test_results")
 
 
-@pandas_udf(_ENTITY_COUNTS_SCHEMA)
-def _entity_counts_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for texts in batches:
-        rows = []
-        for t in texts:
-            t = t or ""
-            doc_type, _ = classify(t)
-            ents = extract_entities(t, doc_type, _DEFAULT_CONFIG)
-            tr = ents.get("test_results")
-            n_tr = len(rows_from_test_results(tr)) if isinstance(tr, dict) else 0
-            scalars = sorted(k for k in ents if k not in _NON_SCALAR_KEYS)
-            rows.append(
-                {
-                    "doc_type": doc_type,
-                    "n_entities": len(scalars),
-                    "entity_keys": ",".join(scalars),
-                    "n_test_results": n_tr,
-                }
-            )
-        yield pd.DataFrame(
-            rows, columns=["doc_type", "n_entities", "entity_keys", "n_test_results"]
-        )
+def _entity_counts(t: str | None) -> dict:
+    t = t or ""
+    doc_type, _ = classify(t)
+    ents = extract_entities(t, doc_type, _DEFAULT_CONFIG)
+    tr = ents.get("test_results")
+    scalars = sorted(k for k in ents if k not in _NON_SCALAR_KEYS)
+    return {
+        "doc_type": doc_type,
+        "n_entities": len(scalars),
+        "entity_keys": ",".join(scalars),
+        "n_test_results": len(rows_from_test_results(tr)) if isinstance(tr, dict) else 0,
+    }
+
+
+_entity_counts_udf = row_udf(_ENTITY_COUNTS_SCHEMA, _entity_counts)
 
 
 def q_entity_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

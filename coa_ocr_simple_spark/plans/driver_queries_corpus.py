@@ -18,14 +18,13 @@ large-scale training-data pipeline needs beyond dedup and quality.
 
 from __future__ import annotations
 
-from typing import Iterator
+import unicodedata
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from ..functions.udfs import row_udf
 from .driver_queries import _docs, _read
 from .driver_queries_dedup import _MIN_BANDS_AGREE, minhash_candidate_pairs
 
@@ -470,7 +469,7 @@ EXTRA_ORACLES_CORPUS["encoding_artifacts"] = _encoding_sql()
 # friends must map to one canonical form before any hash-based dedup —
 # two byte-different spellings of the same text otherwise defeat exact
 # dedup and fingerprinting.  Spark has no built-in NFC, so this is a
-# deliberate Arrow-batch pandas-UDF operator (unicodedata.normalize —
+# deliberate Arrow-batch UDF operator (unicodedata.normalize —
 # the parity path, like the fingerprint/classify UDFs); the DuckDB
 # oracle uses its native nfc_normalize, verified to agree with Python's
 # unicodedata on the injected sequences (both implement Unicode NFC).
@@ -504,18 +503,11 @@ def _nfc_mangled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", text.otherwise(t).alias("text"))
 
 
-@pandas_udf(StringType())
-def _nfc_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    import unicodedata
+def _nfc(t: str | None) -> str | None:
+    return unicodedata.normalize("NFC", t) if t else t
 
-    for texts in batches:
-        yield pd.Series(
-            [
-                unicodedata.normalize("NFC", t) if t else t
-                for t in texts
-            ],
-            dtype="object",
-        )
+
+_nfc_udf = row_udf(StringType(), _nfc)
 
 
 def nfc_stats(docs: DataFrame) -> DataFrame:

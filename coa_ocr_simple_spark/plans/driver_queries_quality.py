@@ -630,7 +630,7 @@ def edit_distance_pairs(docs: DataFrame) -> DataFrame:
     lev_pct; the cap is part of the query definition, mirrored in the
     DuckDB oracle.  CASE WHEN is JVM-side here, so the gated levenshtein
     genuinely never executes for oversize rows (the whole-batch hazard
-    only applies to pandas UDFs)."""
+    only applies to Python UDFs)."""
     candidates = minhash_candidate_pairs(docs).where(
         F.col("n_bands_agree") >= _MIN_BANDS_AGREE
     )

@@ -11,7 +11,7 @@
                                                  ──> fused UDF              [wide]
         ──> union ──> extracted rows (+ lineage columns)
 
-Both branches end in the same fused pandas UDF, which runs
+Both branches end in the same fused Arrow UDF, which runs
 ``core.extract_document`` once per document (decode, assemble, extract):
 one Python crossing per document.  The fast branch — the dominant
 web-corpus shape — never shuffles.  Catalyst prunes the parquet scan to
@@ -208,7 +208,7 @@ def _media_spans(
 
 def _fused_plan(spans: DataFrame, media: DataFrame | None, options: ExtractOptions):
     """groupBy raw spans (+ joined media pages) first, then decode +
-    assemble + extract in ONE pandas UDF per document."""
+    assemble + extract in ONE Arrow UDF per document."""
     pt = options.passthrough_columns
     text_branch = spans.where(
         F.col("kind").isNull() | ~F.col("kind").isin(*MEDIA_KINDS)

@@ -12,7 +12,7 @@ from pyspark.sql import SparkSession
 SQL_DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # extraction stages are CPU-bound pandas UDFs over few bytes; AQE's
+    # extraction stages are CPU-bound Arrow UDFs over few bytes; AQE's
     # size-based coalescing would serialize them onto too few cores
     "spark.sql.adaptive.coalescePartitions.enabled": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",

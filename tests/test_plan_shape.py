@@ -130,14 +130,15 @@ def test_fused_plan_shape(spark, parity_corpus):
         cols = {c.split("#")[0] for c in m.group(1).split(",")}
         assert cols <= {"doc_id", "spans", "media_ref", "pages", "ocr_pages"}, cols
 
-    # the UDF appears once in the plan tree -> its subtree cannot be
-    # re-executed by a second consumer
-    assert s.count("fused_udf") <= 1 or s.count("pythonUDF") <= 2
+    # the extraction UDF appears exactly once in the plan tree -> its
+    # subtree cannot be re-executed by a second consumer
+    assert s.count("fused_extract(") == 1, s
 
     # the full default plan: one Python boundary per branch (fast + wide)
     full = build_extract_plan(docs, media, options=options)
     s = full._jdf.queryExecution().executedPlan().toString()
     assert s.count("ArrowEvalPython") == 2, s
+    assert s.count("fused_extract(") == 2, s
     assert "BatchEvalPython" not in s
 
 

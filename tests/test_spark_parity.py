@@ -6,7 +6,7 @@ pipeline's output equals the single-node oracle per document —
 - full_text when include_full_text is set.
 
 The oracle is a sequential run of coa_ocr_simple_spark.core; the pipeline
-runs the same functions inside pandas UDFs — so this test verifies the
+runs the same functions inside Arrow UDFs — so this test verifies the
 Spark plumbing: explode order recovery, skew-spread repartition, media
 join, groupBy reassembly, Arrow struct marshalling.
 """

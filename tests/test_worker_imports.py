@@ -16,6 +16,7 @@ import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from coa_ocr_simple_spark import _worker_imports
@@ -81,14 +82,42 @@ def test_install_is_a_no_op_on_lazy_zipimport(monkeypatch):
     assert zipimport.zipimporter.invalidate_caches is _worker_imports._original
 
 
-@eager_zipimport_only
-def test_udf_tasks_reread_no_zip_directory(spark):
-    """Each of 8 tasks re-runs the per-task ``invalidate_caches`` inside a
-    pandas UDF that imports the package: no archive directory is re-read."""
+def _pandas_udf(count):
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def rereads(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        n = count()
+        for ids in batches:
+            yield pd.Series([n] * len(ids))
+
+    return rereads
+
+
+def _arrow_udf(count):
+    from pyspark.sql.functions import arrow_udf
+
+    @arrow_udf("long")
+    def rereads(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        n = count()
+        for ids in batches:
+            yield pa.array([n] * len(ids), type=pa.int64())
+
+    return rereads
+
+
+@eager_zipimport_only
+@pytest.mark.parametrize(
+    "make_udf", [_pandas_udf, _arrow_udf], ids=["pandas_udf", "arrow_udf"]
+)
+def test_udf_tasks_reread_no_zip_directory(spark, make_udf):
+    """Each of 8 tasks re-runs the per-task ``invalidate_caches`` inside a
+    UDF that imports the package: no archive directory is re-read.  Both
+    UDF families the package ships are covered: Arrow (every core UDF)
+    and pandas (the BPE encoder, the mapInPandas and applyInPandasWithState
+    sites)."""
+
+    def count() -> int:
         import importlib
         import zipimport
 
@@ -101,8 +130,7 @@ def test_udf_tasks_reread_no_zip_directory(spark):
             importlib.invalidate_caches()
         finally:
             zipimport._read_directory = original
-        for ids in batches:
-            yield pd.Series([len(calls)] * len(ids))
+        return len(calls)
 
-    df = spark.range(0, 64, numPartitions=8).select(rereads("id").alias("n"))
+    df = spark.range(0, 64, numPartitions=8).select(make_udf(count)("id").alias("n"))
     assert df.agg({"n": "max"}).first()[0] == 0
