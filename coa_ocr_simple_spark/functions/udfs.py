@@ -22,6 +22,7 @@ construction.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable, Iterator
 from functools import lru_cache
 from typing import Any
@@ -52,28 +53,40 @@ def row_udf(return_type: DataType, fn: Callable[[Any], Any]):
 
 
 @lru_cache(maxsize=8)
-def _config_from_json(config_json: str) -> ModelConfig:
-    return ModelConfig.from_json(config_json)
+def _configs_from_json(configs_json: str) -> tuple[ModelConfig, dict[str, ModelConfig]]:
+    default, tenants = json.loads(configs_json)
+    return ModelConfig.from_json(default), {
+        tenant: ModelConfig.from_json(c) for tenant, c in tenants.items()
+    }
 
 
-def make_fused_extractor_udf(config_json: str):
-    """raw span array (with joined media pages) -> full extraction result.
+def make_fused_extractor_udf(config: ModelConfig, tenant_configs: dict[str, ModelConfig]):
+    """struct(raw span array (with joined media pages), tenant) -> full
+    extraction result.
 
     One Python crossing per document: the UDF sorts the spans, decodes
     each (text pass-through, HTML strip, PDF/image page-cap decode),
-    assembles the document text, and runs the frozen process_document —
-    i.e. it calls exactly the oracle's ``extract_document``.  The
-    assembled text itself is not returned: the plan rebuilds full_text
-    JVM-side from out_spans when asked, so it never crosses Arrow.
+    assembles the document text, and runs the frozen process_document
+    under ``tenant_configs.get(tenant, config)`` — i.e. it calls exactly
+    the oracle's ``extract_document``.  The configs travel as one JSON
+    string, parsed once per worker.  The assembled text itself is not
+    returned: the plan rebuilds full_text JVM-side from out_spans when
+    asked, so it never crosses Arrow.
     """
     schema = StructType(
         [StructField("out_spans", ArrayType(SPAN))]
         + list(EXTRACT_RESULT.fields)
         + [StructField("n_spans", IntegerType())]
     )
+    configs_json = json.dumps(
+        [config.to_json(), {tenant: c.to_json() for tenant, c in tenant_configs.items()}]
+    )
 
-    def fused_extract(raw_spans: list[dict] | None) -> dict:
-        spans = [s for s in raw_spans or [] if s is not None and s["kind"] is not None]
+    def fused_extract(doc: dict) -> dict:
+        default, by_tenant = _configs_from_json(configs_json)
+        spans = [
+            s for s in doc["raw_spans"] or [] if s is not None and s["kind"] is not None
+        ]
         pages_by_ref = {
             s["media_ref"]: (s["pages"] or [], s["ocr_pages"] or [])
             for s in spans
@@ -83,7 +96,7 @@ def make_fused_extractor_udf(config_json: str):
             "",
             spans,
             lambda ref: pages_by_ref.get(ref, ([], [])),
-            _config_from_json(config_json),
+            by_tenant.get(doc["tenant"], default),
         )
         row = result_to_row(oracle)
         row["out_spans"] = oracle["out_spans"]

@@ -27,11 +27,7 @@ from pyspark.sql import functions as F
 from ..core.config import EMPTY_CONFIG, ModelConfig
 from ..operators.checkpoint import LINEAGE_RUN, partition_metrics
 from ..operators.observed import Observed
-from ..plans.extract_plan import (
-    ExtractOptions,
-    build_extract_plan,
-    build_multi_tenant_plan,
-)
+from ..plans.extract_plan import TENANT, ExtractOptions, build_extract_plan
 from ..session import make_session  # noqa: F401  (perfbench imports it from here)
 from ..sources.tables import TableIO
 from . import _cli
@@ -80,26 +76,37 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     """Extract ``args.input`` and append the results to ``args.output``.
 
     ``docs_written`` is the number of rows this invocation appended, an
-    observed metric of the append itself.  A ``--run-id`` reused across
-    invocations therefore counts only this invocation's rows, while the
-    ``--checkpoint`` metrics cover every output row under that run id.
-    One SQL action without ``--checkpoint`` (the append), two with it (the
-    append, then the metrics over a re-read of the output)."""
+    observed metric of the append itself, and the ``--checkpoint``
+    metrics cover the same rows: the files this append added, read back,
+    so a ``--run-id`` reused across invocations counts each invocation
+    once (a catalog output reads back every row under the run id, see
+    ``TableIO.appended``).  One SQL action without ``--checkpoint`` (the
+    append), two with it (the append, then the metrics).
+
+    With ``--tenants`` and a ``--tenant-column`` in the input, each
+    document extracts under its tenant's config (an unknown or null
+    tenant under the default) and every result row carries the tenant in
+    ``_tenant_id``."""
     io = TableIO(spark)
     docs = io.read(args.input)
     media = io.read_if_exists(args.media) if args.media else None
     config = ModelConfig.load(args.config) if args.config else EMPTY_CONFIG
 
-    done = io.read_if_exists(args.output) if args.resume else None
+    resume = args.resume and io.exists(args.output)
+    done = io.read(args.output, "doc_id string") if resume else None
 
     tenants = [t.strip() for t in (args.tenants or "").split(",") if t.strip()]
-    if len(tenants) > 1 and args.tenant_column not in docs.columns:
+    tenant_configs = {}
+    if tenants and args.tenant_column in docs.columns:
+        docs = docs.withColumnRenamed(args.tenant_column, TENANT)
+        tenant_configs = load_tenant_configs(args.config_dir or ".", tenants, default=config)
+    elif len(tenants) > 1:
         raise SystemExit(
             f"--tenants given but input has no '{args.tenant_column}' column "
             "(use --tenant-column, or a single tenant to apply one config "
             "to the whole input)"
         )
-    if len(tenants) == 1 and args.tenant_column not in docs.columns:
+    elif tenants:
         # single-tenant invocation (the reference's one-request-one-tenant
         # shape): that tenant's config applies to the whole input; an
         # explicit --config is the fallback when the tenant file is absent
@@ -109,24 +116,13 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
 
     options = ExtractOptions(
         config=config,
+        tenant_configs=tenant_configs,
         spread_partitions=args.spread_partitions,
         broadcast_media=args.broadcast_media or None,
         include_full_text=args.include_full_text,
         run_id=args.run_id,
     )
-    if tenants and args.tenant_column in docs.columns:
-        results = build_multi_tenant_plan(
-            docs,
-            media,
-            tenant_configs=load_tenant_configs(
-                args.config_dir or ".", tenants, default=config
-            ),
-            options=options,
-            done=done,
-            tenant_column=args.tenant_column,
-        )
-    else:
-        results = build_extract_plan(docs, media, options=options, done=done)
+    results = build_extract_plan(docs, media, options=options, done=done)
 
     if args.output_buckets:
         # file-count / layout control for the sink: hash-bucket by doc_id so
@@ -136,11 +132,13 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         results = results.repartition(args.output_buckets, "doc_id")
 
     appended = Observed.rows(results, "docs_written")
-    io.append(appended.df, args.output)
-
     if args.checkpoint:
-        written = io.read(args.output).where(F.col(LINEAGE_RUN) == args.run_id)
-        io.append(partition_metrics(written), args.checkpoint)
+        written = io.appended(appended.df, args.output)
+        # a catalog output reads back whole: keep this run id's rows
+        metrics = partition_metrics(written.where(F.col(LINEAGE_RUN) == args.run_id))
+        io.append(metrics.coalesce(1), args.checkpoint)
+    else:
+        io.append(appended.df, args.output)
 
     return {"run_id": args.run_id, **appended.values}
 

@@ -4,7 +4,9 @@ Resumability model for a 10^12-doc run:
 - the extracted table carries lineage columns ``_run_id`` and
   ``_partition_id`` (written per task via spark_partition_id());
 - the checkpoint table holds per-partition, per-doc-type metrics rows
-  (run_id, partition_id, doc_type, n_docs, n_spans, status);
+  (run_id, partition_id, doc_type, n_docs, n_spans, status) of the rows
+  one invocation appended, one file per invocation, so a run id reused
+  by a resume adds its own rows and never recounts earlier ones;
 - a resume run anti-joins the input against the extracted table's doc_ids,
   so only unfinished documents are processed.  Appends are idempotent at
   the document level because each doc_id is processed exactly once per
@@ -34,13 +36,15 @@ def resume_filter(docs: DataFrame, done: DataFrame | None) -> DataFrame:
     """Anti-join the input against already-extracted doc_ids.
 
     ``done`` is the extracted table (any subset of columns including
-    doc_id) or None for a fresh run.  Broadcast is left to AQE: at small
-    completed-set sizes it becomes a broadcast anti-join, at large sizes a
-    shuffle join — both correct.
+    doc_id; read it as just ``doc_id string``) or None for a fresh run.
+    A left-anti join has set semantics, so the done side needs no
+    distinct.  Broadcast is left to AQE: at small completed-set sizes it
+    becomes a broadcast anti-join, at large sizes a shuffle join — both
+    correct.
     """
     if done is None:
         return docs
-    return docs.join(done.select("doc_id").distinct(), on="doc_id", how="left_anti")
+    return docs.join(done.select("doc_id"), on="doc_id", how="left_anti")
 
 
 def partition_metrics(results_with_lineage: DataFrame, status: str = "ok") -> DataFrame:

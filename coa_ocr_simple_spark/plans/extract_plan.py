@@ -16,11 +16,18 @@ Both branches end in the same fused Arrow UDF, which runs
 one Python crossing per document.  The fast branch — the dominant
 web-corpus shape — never shuffles.  Catalyst prunes the parquet scan to
 (doc_id, spans) and pushes the resume anti-join below the explode.
+
+Multi-tenant runs (reference app.py:261-301 ``get_tenant_processor``:
+each tenant extracts with its own trained config, an unseen tenant with
+the default) take the same plan: the input's ``_tenant_id`` rides along
+both branches into the UDF, which picks the document's config, and is
+re-emitted as the last result column.  The plan does not grow with the
+tenant count.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,19 +38,20 @@ from ..functions.udfs import make_fused_extractor_udf
 from ..operators.checkpoint import resume_filter, with_lineage
 
 MEDIA_KINDS = ("pdf", "image")
+TENANT = "_tenant_id"
 
 
 @dataclass
 class ExtractOptions:
-    config: ModelConfig = EMPTY_CONFIG
+    config: ModelConfig = EMPTY_CONFIG  # the default, also of an unknown or null tenant
+    # per-tenant configs keyed by the input's _tenant_id; when given, every
+    # result row carries _tenant_id (carried through the plan, never re-joined)
+    tenant_configs: dict[str, ModelConfig] = field(default_factory=dict)
     spread_partitions: int | None = None  # skew spread for exploded spans
     broadcast_media: bool | None = None  # None -> AQE decides
     include_full_text: bool = False  # full_text is big; opt-in (rebuilt
     # JVM-side from out_spans, so it never crosses Arrow)
     run_id: str = "run-0"
-    passthrough_columns: tuple[str, ...] = ()  # input columns re-emitted
-    # verbatim on every result row (constant per doc_id, e.g. a tenant
-    # id) — carried through the plan, never re-joined
 
 
 def build_extract_plan(
@@ -66,69 +74,30 @@ def build_extract_plan(
     simple = todo.where(is_simple)
     complex_docs = todo.where(~F.coalesce(is_simple, F.lit(False)))
     fast = _fastpath_plan(simple, options)
-    wide = _fused_plan(
-        explode_spans(complex_docs, options.passthrough_columns), media, options
-    )
+    wide = _fused_plan(explode_spans(complex_docs, _carried(options)), media, options)
     return fast.unionByName(wide)
 
 
-def build_multi_tenant_plan(
-    docs: DataFrame,
-    media: DataFrame | None,
-    *,
-    tenant_configs: dict[str, ModelConfig],
-    options: ExtractOptions | None = None,
-    done: DataFrame | None = None,
-    tenant_column: str = "tenant_id",
-) -> DataFrame:
-    """Per-tenant extraction in ONE job invocation (reference
-    app.py:261-301 ``get_tenant_processor``: each tenant gets its own
-    trained model state; an unseen tenant gets a fresh default).
+def _carried(options: ExtractOptions) -> tuple[str, ...]:
+    """Input columns every result row re-emits: the tenant of a
+    multi-tenant run."""
+    return (TENANT,) if options.tenant_configs else ()
 
-    Spark shape: one subplan per tenant, each with that tenant's frozen
-    config baked into its UDF, unioned at the end — the tenant filter is
-    a pushed-down predicate (partition pruning when the table is
-    partitioned/bucketed by tenant), and no per-row config dispatch ever
-    enters the Python hot path.  Docs whose tenant has no config run
-    under ``options.config`` (the reference's fresh-default behavior).
-    Every result row carries its tenant in ``_tenant_id``."""
-    from dataclasses import replace
 
-    options = options or ExtractOptions()
-    plans: list[DataFrame] = []
-    known = sorted(tenant_configs)
-    for tenant in known:
-        sub = docs.where(F.col(tenant_column) == tenant).drop(tenant_column)
-        topts = replace(options, config=tenant_configs[tenant])
-        plans.append(
-            build_extract_plan(sub, media, options=topts, done=done).withColumn(
-                "_tenant_id", F.lit(tenant)
-            )
-        )
-    rest = docs.where(
-        ~F.coalesce(F.col(tenant_column).isin(*known), F.lit(False))
-    ).withColumnRenamed(tenant_column, "_tenant_id")
-    # the unknown-tenant id rides through the subplan as a passthrough
-    # column (round-2 verdict item 7) — no join back, one fewer Exchange
-    default_branch = build_extract_plan(
-        rest,
-        media,
-        options=replace(options, passthrough_columns=("_tenant_id",)),
-        done=done,
-    )
-    plans.append(default_branch)
-    out = plans[0]
-    for p in plans[1:]:
-        out = out.unionByName(p)
-    return out
+def _extract(raw_spans, options: ExtractOptions):
+    """The fused UDF over ``struct(raw_spans, tenant)``; a run without
+    tenant configs passes a null tenant, which gets ``options.config``."""
+    tenant = F.col(TENANT) if options.tenant_configs else F.lit(None).cast("string")
+    fused = make_fused_extractor_udf(options.config, options.tenant_configs)
+    return fused(F.struct(raw_spans.alias("raw_spans"), tenant.alias("tenant"))).alias("r")
 
 
 def explode_spans(docs: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
     """documents -> one row per span (zero-span docs kept with null span).
 
-    ``passthrough`` columns (e.g. a tenant id) ride along on every span
-    row so downstream regrouping can re-emit them without a join back to
-    the source."""
+    ``passthrough`` columns (the tenant id) ride along on every span row
+    so downstream regrouping can re-emit them without a join back to the
+    source."""
     return docs.select(
         "doc_id", *passthrough, F.posexplode_outer("spans").alias("pos", "span")
     ).select(
@@ -157,25 +126,23 @@ def _fastpath_plan(simple_docs: DataFrame, options: ExtractOptions):
             F.lit(None).cast("array<string>").alias("ocr_pages"),
         ),
     )
-    fused = make_fused_extractor_udf(options.config.to_json())
-    result = simple_docs.select(
-        "doc_id",
-        *options.passthrough_columns,
-        fused(raw_spans.alias("raw_spans")).alias("r"),
-    )
+    result = simple_docs.select("doc_id", *_carried(options), _extract(raw_spans, options))
     return _result_rows(result, options)
 
 
 def _result_rows(result: DataFrame, options: ExtractOptions) -> DataFrame:
     """Flatten the fused UDF's struct ``r`` into result columns (+ the
-    opt-in full_text, joined from out_spans as the oracle joins it)."""
-    rows = result.select("doc_id", *options.passthrough_columns, "r.*")
+    opt-in full_text, joined from out_spans as the oracle joins it), then
+    the lineage columns, then the carried tenant."""
+    carried = _carried(options)
+    rows = result.select("doc_id", *carried, "r.*")
     if options.include_full_text:
         rows = rows.withColumn(
             "full_text",
             F.array_join(F.transform("out_spans", lambda s: s["text"]), SPAN_JOIN),
         )
-    return with_lineage(rows, options.run_id)
+    rows = with_lineage(rows, options.run_id)
+    return rows.select(*[c for c in rows.columns if c not in carried], *carried)
 
 
 def _media_spans(
@@ -200,7 +167,7 @@ def _media_spans(
             "pages", F.lit(None).cast("array<string>")
         ).withColumn("ocr_pages", F.lit(None).cast("array<string>"))
     return media_branch.select(
-        "doc_id", *options.passthrough_columns, "kind",
+        "doc_id", *_carried(options), "kind",
         F.lit(None).cast("string").alias("text"),
         "media_ref", "offset", "pages", "ocr_pages",
     )
@@ -209,7 +176,7 @@ def _media_spans(
 def _fused_plan(spans: DataFrame, media: DataFrame | None, options: ExtractOptions):
     """groupBy raw spans (+ joined media pages) first, then decode +
     assemble + extract in ONE Arrow UDF per document."""
-    pt = options.passthrough_columns
+    pt = _carried(options)
     text_branch = spans.where(
         F.col("kind").isNull() | ~F.col("kind").isin(*MEDIA_KINDS)
     ).select(
@@ -228,13 +195,12 @@ def _fused_plan(spans: DataFrame, media: DataFrame | None, options: ExtractOptio
         F.col("kind").isNotNull(),
         F.struct("offset", "kind", "text", "media_ref", "pages", "ocr_pages"),
     )
-    # passthrough columns are constant per doc_id: first() re-emits them
-    # from the same wide shuffle — no join back to the source
+    # the tenant is constant per doc_id: first() re-emits it from the same
+    # wide shuffle — no join back to the source
     grouped = unioned.groupBy("doc_id").agg(
         F.collect_list(entry).alias("raw_spans"),
         *[F.first(c, ignorenulls=False).alias(c) for c in pt],
     )
 
-    fused = make_fused_extractor_udf(options.config.to_json())
-    result = grouped.select("doc_id", *pt, fused(F.col("raw_spans")).alias("r"))
+    result = grouped.select("doc_id", *pt, _extract(F.col("raw_spans"), options))
     return _result_rows(result, options)

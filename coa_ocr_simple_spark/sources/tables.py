@@ -19,6 +19,10 @@ def _is_path(identifier: str) -> bool:
     return "/" in identifier or identifier.endswith(".parquet")
 
 
+def _is_data_file(name: str) -> bool:
+    return name.endswith(".parquet") or name.startswith("part-")
+
+
 def _listing(spark: SparkSession, path: str) -> bool | list[str]:
     """What ``path`` holds on the filesystem Spark reads and writes it on:
     False when absent, True for a file, the entry names for a directory.
@@ -54,19 +58,19 @@ class TableIO:
     def read(self, identifier: str, schema=None) -> DataFrame:
         """Parquet by default; ``.jsonl``/``.json`` paths read as JSON
         Lines (the common raw-ingest format of a training-data pipeline).
-        Pass ``schema`` for JSON at scale — schema inference scans the
-        data once, which is fine for a sample and wrong for 100 TB."""
+        Pass ``schema`` for a path read at scale: it yields just those
+        columns with no inference job (JSON inference scans the data once,
+        which is fine for a sample and wrong for 100 TB).  A catalog table
+        keeps its own schema."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         if identifier.endswith((".jsonl", ".json")):
             # DROPMALFORMED: a corrupt line must neither kill a 10^12-doc
             # job nor become a phantom all-null document (PERMISSIVE's
             # default does the latter — caught by probe).  Real clusters
             # wanting an audit trail add badRecordsPath instead.
-            reader = self.spark.read.option("mode", "DROPMALFORMED")
-            if schema is not None:
-                reader = reader.schema(schema)
-            return reader.json(identifier)
+            return reader.option("mode", "DROPMALFORMED").json(identifier)
         if _is_path(identifier):
-            return self.spark.read.parquet(identifier)
+            return reader.parquet(identifier)
         return self.spark.read.table(identifier)
 
     def append(self, df: DataFrame, identifier: str) -> None:
@@ -78,6 +82,28 @@ class TableIO:
             except Exception:
                 # table does not exist yet: create-or-replace v2 path
                 df.writeTo(identifier).createOrReplace()
+
+    def appended(self, df: DataFrame, identifier: str) -> DataFrame:
+        """Append ``df`` and return the rows this append wrote, read back
+        with ``df``'s own schema, so no job infers it.  For a path these
+        are the data files the append added: the listing before it against
+        the listing after it.  A catalog table reads back whole, every
+        earlier append included: the appended Iceberg snapshot would
+        give just this append, but no Iceberg runtime runs here
+        (ICEBERG.md)."""
+        if not _is_path(identifier):
+            self.append(df, identifier)
+            return self.read(identifier)
+        before = self._data_files(identifier)
+        self.append(df, identifier)
+        added = sorted(self._data_files(identifier) - before)
+        return self.spark.read.schema(df.schema).parquet(*added)
+
+    def _data_files(self, path: str) -> set[str]:
+        found = _listing(self.spark, path)
+        if isinstance(found, bool):
+            return set()
+        return {f"{path.rstrip('/')}/{name}" for name in found if _is_data_file(name)}
 
     def overwrite(self, df: DataFrame, identifier: str) -> None:
         """Replace the target's contents.  The right mode for re-runnable
@@ -98,7 +124,7 @@ class TableIO:
         found = _listing(self.spark, identifier)
         if isinstance(found, bool):
             return found
-        return any(name.endswith(".parquet") or name.startswith("part-") for name in found)
+        return any(_is_data_file(name) for name in found)
 
     def read_if_exists(self, identifier: str) -> DataFrame | None:
         return self.read(identifier) if self.exists(identifier) else None

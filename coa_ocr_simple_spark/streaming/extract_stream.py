@@ -47,7 +47,7 @@ def run_streaming_extract(
     stream = spark.readStream.schema(DOCUMENTS).parquet(input_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        done = io.read_if_exists(output_path)
+        done = io.read(output_path, "doc_id string") if io.exists(output_path) else None
         results = build_extract_plan(
             batch_df,
             media,

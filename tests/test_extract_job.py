@@ -91,7 +91,10 @@ def test_reused_run_id_counts_only_this_invocation(spark, tmp_path):
 def test_extract_run_action_budget(spark, tmp_path, job_and_action_counts):
     """A ``--resume --checkpoint`` run is two SQL actions (the append, the
     checkpoint metrics); a run without ``--checkpoint`` is one.  The count
-    read back through ``written.count()`` cost a third action."""
+    read back through ``written.count()`` cost a third action.  The resume
+    run is 8 Spark jobs; it was 11 when the done set was read with an
+    inferred schema and deduplicated (its own shuffle map stage), and the
+    checkpoint re-read the output with an inferred schema."""
     docs, media = _corpus(tmp_path)
     out = str(tmp_path / "out")
     _, n_actions = job_and_action_counts(
@@ -100,13 +103,27 @@ def test_extract_run_action_budget(spark, tmp_path, job_and_action_counts):
     assert n_actions == 2  # the prefix write and the append
     flags = ["--run-id", "r2", "--resume", "--checkpoint", str(tmp_path / "ckpt")]
     summary = {}
-    _, n_actions = job_and_action_counts(
+    n_jobs, n_actions = job_and_action_counts(
         lambda: summary.update(_extract(spark, docs, media, out, *flags))
     )
-    assert n_actions == 2
+    assert (n_jobs, n_actions) == (8, 2)
     assert summary["docs_written"] == N_DOCS - 24
     ckpt = spark.read.parquet(str(tmp_path / "ckpt"))
     assert ckpt.agg(F.sum("n_docs")).first()[0] == N_DOCS - 24
+
+
+def test_checkpoint_counts_only_this_invocation(spark, tmp_path):
+    """Two runs under the default run id: the checkpoint counts each
+    appended row once (re-reading every row under the run id counted the
+    first run's 24 docs again, 64 for 40 rows), one file per run."""
+    docs, media = _corpus(tmp_path)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _extract(spark, _prefix(spark, tmp_path, docs), media, out, "--checkpoint", ckpt)
+    _extract(spark, docs, media, out, "--checkpoint", ckpt, "--resume")
+    assert spark.read.parquet(out).count() == N_DOCS
+    metrics = spark.read.parquet(ckpt)
+    assert metrics.agg(F.sum("n_docs")).first()[0] == N_DOCS
+    assert metrics.select(F.input_file_name()).distinct().count() == 2
 
 
 def test_uri_output_resume_writes_every_doc_once(spark, tmp_path):

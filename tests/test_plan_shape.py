@@ -1,11 +1,14 @@
 """Plan-shape regression guards — the scale properties that must not rot:
 a shuffle-free fast branch, exactly one wide (groupBy) shuffle in the
 wide branch, one ArrowEvalPython boundary per branch, pruned document
-scans, and no second execution of the UDF subtree."""
+scans, no second execution of the UDF subtree, a resume done set read as
+bare doc_ids, and no unbounded global window."""
 
 from __future__ import annotations
 
+import ast
 import re
+from pathlib import Path
 
 from coa_ocr_simple_spark.plans.extract_plan import (
     ExtractOptions,
@@ -105,6 +108,78 @@ def test_no_global_window_in_length_quantiles(spark):
         # the first arg must be a partition column, not an "x ASC/DESC"
         # ordering expression (which is what a global window starts with)
         assert " ASC" not in first_arg and " DESC" not in first_arg, line
+
+
+# Every global (partition-less) window in the package, by (file, function),
+# with the domain that bounds its single-partition input.
+GLOBAL_WINDOWS = {
+    ("plans/driver_queries_mix.py", "q_vocab_coverage_curve"):
+        "one row per distinct BPE token: the corpus alphabet plus the fixed merges",
+    ("plans/driver_queries_mix.py", "token_budget_mixture"):
+        "one row per source",
+    ("plans/driver_queries_quality.py", "ccnet_ppl_buckets"):
+        "one row per distinct mille_bits: <= _LM_UNSEEN_BITS*1000 + 1 values",
+    ("plans/driver_queries_ext.py", "_pq_codebook"):
+        "seed vectors only: <= _PQ_SEED_SCAN/_PQ_SEED_MOD rows",
+    ("plans/driver_queries_ext.py", "event_gap_histogram"):
+        "one row per log2 gap bucket: <= 64 values",
+    ("plans/driver_queries_corpus.py", "bm25_model"):
+        "terms with df >= N/20: at most 20*avgdl rows",
+}
+
+
+def _global_window_sites(root: Path) -> set[tuple[str, str]]:
+    """(file, innermost function) of every ``Window.orderBy(``,
+    ``Window.rowsBetween(``, ``Window.rangeBetween(`` and argument-less
+    ``Window.partitionBy()`` under ``root``."""
+    sites = set()
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "Window"
+            and (
+                node.func.attr in ("orderBy", "rowsBetween", "rangeBetween")
+                or (node.func.attr == "partitionBy" and not node.args)
+            )
+        ):
+            sites.add((path.relative_to(root).as_posix(), func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text(encoding="utf-8")), "<module>")
+    return sites
+
+
+def test_every_global_window_is_allowlisted_with_its_bound():
+    """A partition-less window moves all its rows into one partition, so
+    each one must name the domain that keeps its input small.  A new
+    site fails here until it is added to ``GLOBAL_WINDOWS``; a removed
+    one fails until its entry goes."""
+    root = Path(__file__).resolve().parents[1] / "coa_ocr_simple_spark"
+    assert _global_window_sites(root) == set(GLOBAL_WINDOWS)
+
+
+def test_resume_done_side_is_a_bare_doc_id_scan(spark, parity_corpus):
+    """The done set of a resume is read as ``doc_id string`` and feeds
+    the left-anti join as is: no distinct (its aggregate and shuffle),
+    no column but doc_id."""
+    from coa_ocr_simple_spark.operators.checkpoint import resume_filter
+    from coa_ocr_simple_spark.sources.tables import TableIO
+
+    docs = spark.read.parquet(parity_corpus["docs_path"])
+    done = TableIO(spark).read(parity_corpus["docs_path"], "doc_id string")
+    s = resume_filter(docs, done)._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in s, s
+    assert "HashAggregate" not in s, s
+    assert not re.search(r"\bExchange\b", s), s  # a BroadcastExchange may stay
+    scans = re.findall(r"FileScan parquet [^\n]*ReadSchema: (struct<[^\n]*>)", s)
+    assert "struct<doc_id:string>" in scans, s
 
 
 def test_fused_plan_shape(spark, parity_corpus):

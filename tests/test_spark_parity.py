@@ -82,6 +82,29 @@ def test_extraction_result_equality(parity_corpus, pipeline_rows):
         assert actual["fingerprint"] == expected["fingerprint"], doc_id
 
 
+def test_written_map_keys_keep_the_oracle_order(spark, parity_corpus, tmp_path):
+    """The entities/sections maps of the written parquet hold their keys
+    in ``result_to_row``'s insertion order.  The order is read in Spark:
+    a collected map passes through a Java hash map and loses it."""
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(parity_corpus["docs_path"])
+    media = spark.read.parquet(parity_corpus["media_path"])
+    out = str(tmp_path / "extracted")
+    build_extract_plan(docs, media, options=ExtractOptions(spread_partitions=16)).write.parquet(out)
+    keys = spark.read.parquet(out).select(
+        "doc_id", F.map_keys("entities").alias("e"), F.map_keys("sections").alias("s")
+    )
+    got = {r["doc_id"]: (r["e"], r["s"]) for r in keys.collect()}
+    want = {
+        doc_id: (list(row["entities"]), list(row["sections"]))
+        for doc_id, row in _oracle_rows(parity_corpus).items()
+    }
+    assert got == want
+    assert any(len(e) > 1 for e, _ in want.values())
+    assert any(len(s) > 1 for _, s in want.values())
+
+
 def test_lineage_columns_present(pipeline_rows):
     for row in pipeline_rows.values():
         assert row["_run_id"] == "parity"
