@@ -11,7 +11,11 @@ Resumability model for a 10^12-doc run:
   so only unfinished documents are processed.  Appends are idempotent at
   the document level because each doc_id is processed exactly once per
   final table state (re-running a partially-completed run adds only the
-  missing documents).
+  missing documents);
+- a resume counts those documents first (doc_ids only, no UDF): an empty
+  delta writes nothing to the output or the checkpoint, and a small one
+  is extracted in fewer tasks, so it appends fewer files
+  (``jobs.extract.delta_tasks``).
 
 With an Iceberg catalog the append is snapshot-isolated; with the Parquet
 fallback the job-level output committer gives all-or-nothing per write.

@@ -1,8 +1,9 @@
 """jobs.extract.run: its observed count, its action budget and its paths.
 
 ``docs_written`` is an observed metric of the append, so a run costs one
-SQL action, two with ``--checkpoint``.  ``--output`` and ``--media`` are
-looked up where Spark reads and writes them: a URI (``file:/``,
+SQL action, two with ``--checkpoint``; a resume counts what is left first
+(one more), writes nothing when that is 0 and extracts a small delta in
+fewer tasks.  ``--output`` and ``--media`` are looked up where Spark reads and writes them: a URI (``file:/``,
 ``hdfs://``, ``s3a://``) on its own filesystem, a path with no scheme on
 the session's default filesystem.  A resume must see the rows such an
 output already holds, and such a media store must resolve.
@@ -11,8 +12,8 @@ output already holds, and such a media store must resolve.
 from __future__ import annotations
 
 import json
+import os
 import random
-import threading
 
 from types import SimpleNamespace
 
@@ -20,8 +21,15 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from coa_ocr_simple_spark.fixtures.generate import SpanBuilder, template_coa, write_corpus
-from coa_ocr_simple_spark.jobs.extract import main, parse_args, run
+from coa_ocr_simple_spark.jobs.extract import (
+    DELTA_DOCS_PER_TASK,
+    delta_tasks,
+    main,
+    parse_args,
+    run,
+)
 from coa_ocr_simple_spark.operators import observed
+from coa_ocr_simple_spark.sources.tables import TableIO
 
 N_DOCS = 40
 PREFIX = "doc-00000024"  # the first 24 docs
@@ -60,23 +68,130 @@ def test_main_prints_the_summary_as_json(spark, tmp_path, capsys):
     assert json.loads(capsys.readouterr().out) == {"run_id": "cli", "docs_written": N_DOCS}
 
 
-def test_all_done_resume_returns_zero(spark, tmp_path):
-    """A resume with nothing left to extract: AQE prunes the observed
-    append to an empty relation, yet the run returns 0 without hanging."""
+def test_all_done_resume_returns_zero(spark, tmp_path, job_and_action_counts):
+    """Resuming a finished output counts 0 documents to do and returns 0
+    written.  It appends no empty file to the output or the checkpoint
+    (each resume ran the whole plan and added one of each), and costs
+    one SQL action, the count of what is left."""
     docs, media = _corpus(tmp_path)
-    out = str(tmp_path / "out")
-    assert _extract(spark, docs, media, out, "--run-id", "r1")["docs_written"] == N_DOCS
-    result = {}
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    _extract(spark, docs, media, str(out), "--run-id", "r1", "--checkpoint", str(ckpt))
+    listings = sorted(os.listdir(out)), sorted(os.listdir(ckpt))
+    for _ in range(3):
+        summary = {}
+        _, n_actions = job_and_action_counts(
+            lambda: summary.update(
+                _extract(
+                    spark, docs, media, str(out), "--run-id", "r2",
+                    "--checkpoint", str(ckpt), "--resume",
+                )
+            )
+        )
+        assert summary == {"run_id": "r2", "docs_todo": 0, "docs_written": 0}
+        assert n_actions == 1
+        assert (sorted(os.listdir(out)), sorted(os.listdir(ckpt))) == listings
+    n_docs = spark.read.parquet(str(ckpt)).agg(F.sum("n_docs")).first()[0]
+    assert n_docs == spark.read.parquet(str(out)).count() == N_DOCS
 
-    def _resume():
-        result["summary"] = _extract(spark, docs, media, out, "--run-id", "r2", "--resume")
 
-    t = threading.Thread(target=_resume, daemon=True)
-    t.start()
-    t.join(timeout=600)
-    assert not t.is_alive(), "extract run hung reading docs_written"
-    assert result["summary"] == {"run_id": "r2", "docs_written": 0}
-    assert spark.read.parquet(out).count() == N_DOCS
+def test_delta_tasks_boundaries():
+    """One task per ``DELTA_DOCS_PER_TASK`` documents left, or per Arrow
+    batch if that is smaller, while that is fewer tasks than the default
+    parallelism; from there on the plan as built (None)."""
+    batch, parallelism, d = 2048, 4, DELTA_DOCS_PER_TASK
+    assert d < batch
+    assert delta_tasks(0, batch, parallelism) == 0
+    assert delta_tasks(1, batch, parallelism) == 1
+    assert delta_tasks(d, batch, parallelism) == 1
+    assert delta_tasks(d + 1, batch, parallelism) == 2
+    assert delta_tasks((parallelism - 1) * d, batch, parallelism) == parallelism - 1
+    assert delta_tasks((parallelism - 1) * d + 1, batch, parallelism) is None
+    assert delta_tasks(parallelism * batch, batch, parallelism) is None
+    assert delta_tasks(10**9, batch, parallelism) is None
+    # a batch smaller than DELTA_DOCS_PER_TASK sizes the tasks
+    assert delta_tasks(16, 16, parallelism) == 1
+    assert delta_tasks(17, 16, parallelism) == 2
+    assert delta_tasks(parallelism * 16, 16, parallelism) is None
+    # maxRecordsPerBatch <= 0: no batch limit
+    assert delta_tasks(d, 0, parallelism) == 1
+    assert delta_tasks(10**9, 0, parallelism) is None
+
+
+def _scans_without_exchange(node) -> int:
+    """File scans reachable from physical plan ``node`` without crossing
+    an exchange, i.e. scans that would run inside ``node``'s tasks."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _scans_without_exchange(node.initialPlan())
+    if name.endswith("ExchangeExec"):
+        return 0
+    children = node.children()
+    return (name == "FileSourceScanExec") + sum(
+        _scans_without_exchange(children.apply(i)) for i in range(children.size())
+    )
+
+
+def _find(node, name: str):
+    """The first node of class ``name`` in physical plan ``node``, or None."""
+    if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        node = node.initialPlan()
+    if node.getClass().getSimpleName() == name:
+        return node
+    children = node.children()
+    found = (_find(children.apply(i), name) for i in range(children.size()))
+    return next((f for f in found if f is not None), None)
+
+
+def test_small_delta_runs_in_fewer_tasks(spark, tmp_path, monkeypatch):
+    """The same 16-doc resume on each side of the sizing rule: below it
+    the extraction is coalesced to ``k`` tasks and appends ``k`` files;
+    at ``parallelism × batch`` documents the plan is the one built, with
+    no ``Coalesce``.  The coalesced tasks read the delta from a shuffle:
+    no input or done-set scan runs inside them, so the scans keep one
+    task per input split.  Both sides write the same rows (their
+    ``_partition_id`` numbers their own UDF input partitions)."""
+    docs, media = _corpus(tmp_path)
+    prefix = _prefix(spark, tmp_path, docs)
+    n_todo, parallelism = N_DOCS - 24, spark.sparkContext.defaultParallelism
+    plans = []
+    append = TableIO.append
+
+    def _append(self, df, identifier):
+        plans.append(df._jdf.queryExecution().executedPlan())
+        append(self, df, identifier)
+
+    monkeypatch.setattr(TableIO, "append", _append)
+
+    def _resume(out, batch) -> set[str]:
+        _extract(spark, prefix, media, out, "--run-id", "r1")
+        before = set(os.listdir(out))
+        plans.clear()
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        saved = spark.conf.get(conf)
+        spark.conf.set(conf, str(batch))
+        try:
+            summary = _extract(spark, docs, media, out, "--run-id", "r2", "--resume")
+        finally:
+            spark.conf.set(conf, saved)
+        assert summary["docs_todo"] == summary["docs_written"] == n_todo
+        return {f for f in set(os.listdir(out)) - before if f.startswith("part-")}
+
+    small, large = str(tmp_path / "small"), str(tmp_path / "large")
+    k = 2
+    assert delta_tasks(n_todo, n_todo // k, parallelism) == k
+    assert len(_resume(small, n_todo // k)) == k
+    coalesce = _find(plans[0], "CoalesceExec")
+    assert coalesce is not None and coalesce.numPartitions() == k
+    assert _scans_without_exchange(coalesce) == 0, coalesce.toString()
+    assert delta_tasks(n_todo, n_todo // parallelism, parallelism) is None
+    _resume(large, n_todo // parallelism)
+    assert _find(plans[0], "CoalesceExec") is None
+
+    def rows(path):
+        df = spark.read.parquet(path).drop("_partition_id")
+        return {r["doc_id"]: r for r in df.collect()}
+
+    assert rows(small) == rows(large)
 
 
 def test_reused_run_id_counts_only_this_invocation(spark, tmp_path):
@@ -89,12 +204,14 @@ def test_reused_run_id_counts_only_this_invocation(spark, tmp_path):
 
 
 def test_extract_run_action_budget(spark, tmp_path, job_and_action_counts):
-    """A ``--resume --checkpoint`` run is two SQL actions (the append, the
-    checkpoint metrics); a run without ``--checkpoint`` is one.  The count
-    read back through ``written.count()`` cost a third action.  The resume
-    run is 8 Spark jobs; it was 11 when the done set was read with an
-    inferred schema and deduplicated (its own shuffle map stage), and the
-    checkpoint re-read the output with an inferred schema."""
+    """A ``--resume --checkpoint`` run is three SQL actions (the count of
+    what is left, the append, the checkpoint metrics); a run without
+    ``--checkpoint`` or ``--resume`` is one.  Measured on this corpus,
+    the resume run is 12 Spark jobs and 3 actions: the count is 3 jobs
+    and the small delta's shuffle 1.  It was 8 jobs and 2 actions before
+    it counted its delta first, and 11 jobs and 2 actions before that, when the done set was read with an inferred schema and
+    deduplicated (its own shuffle map stage) and the checkpoint re-read
+    the output with an inferred schema."""
     docs, media = _corpus(tmp_path)
     out = str(tmp_path / "out")
     _, n_actions = job_and_action_counts(
@@ -106,8 +223,8 @@ def test_extract_run_action_budget(spark, tmp_path, job_and_action_counts):
     n_jobs, n_actions = job_and_action_counts(
         lambda: summary.update(_extract(spark, docs, media, out, *flags))
     )
-    assert (n_jobs, n_actions) == (8, 2)
-    assert summary["docs_written"] == N_DOCS - 24
+    assert (n_jobs, n_actions) == (12, 3)
+    assert summary["docs_todo"] == summary["docs_written"] == N_DOCS - 24
     ckpt = spark.read.parquet(str(tmp_path / "ckpt"))
     assert ckpt.agg(F.sum("n_docs")).first()[0] == N_DOCS - 24
 
