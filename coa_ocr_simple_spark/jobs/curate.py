@@ -48,6 +48,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpoint import release
 from ..operators.observed import Observed
 from ..plans.driver_queries_dedup import _FUNNEL_JACCARD_MIN, curation_stages
 from ..plans.driver_queries_ext import paragraph_lang_profile
@@ -270,6 +271,13 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         observed.append(obs)
         return obs.df
 
+    def _release(prev):
+        # a count the last cut reported, or one AQE dropped and that is
+        # re-counted over `prev`, is read while `prev` is still stored
+        for obs in observed:
+            obs.values
+        release(prev)
+
     doc_sets = [s for s in DOC_SET_STAGES if _on(args, s.flag)]
     rewrites = [r for r in REWRITES if _on(args, r.flag)]
     if doc_sets or rewrites:
@@ -299,9 +307,9 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
             final.join(rows.select("doc_id"), "doc_id", stage.how),
             **{stage.key: F.count(F.lit(1))},
         ).localCheckpoint()
-        prev.unpersist()
+        _release(prev)
 
-    curated = docs.join(final, "doc_id", "left_semi")
+    curated = cut = docs.join(final, "doc_id", "left_semi")
 
     for r in rewrites:
         if len(rewrites) >= 2:
@@ -312,6 +320,8 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
             # double-scans the parquet, cheaper than materializing the
             # payload.
             curated = curated.localCheckpoint()
+            _release(cut)
+            cut = curated
         new = _observe(r.rewrite(curated, args), **r.metrics())
         curated = (
             curated.drop("text", "n_chars")
@@ -366,6 +376,9 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     io.append(curated, args.output)
     for obs in observed:
         summary.update(obs.values)
+    if doc_sets or rewrites:
+        release(final)
+        release(cut)
     # n_curated is the count of the last survivor set
     live = doc_sets[-1].key if doc_sets else "n_curated"
     summary["n_curated"] = n_live = summary[live]

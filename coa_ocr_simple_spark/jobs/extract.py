@@ -16,9 +16,13 @@ AQE on by default (skew-join splitting; post-shuffle coalescing off, see
 ``coa_ocr_simple_spark.session``).
 
 SQL actions: the append, plus the checkpoint metrics with --checkpoint.
-A --resume over an existing output first counts the documents left (one
-more action): an empty delta writes nothing, and a small delta is
-shuffled into fewer tasks than ``defaultParallelism`` (``delta_tasks``).
+A --resume over an existing output first looks for the documents left
+(one more action, an eager ``localCheckpoint`` that scans the input and
+the done set once and keeps at most one task's documents): an empty
+delta writes nothing, a delta that fits one task is extracted from what
+that action kept, and a larger one is counted (one more action) and,
+while it is small, shuffled into fewer tasks than
+``defaultParallelism`` (``delta_tasks``).
 """
 
 from __future__ import annotations
@@ -30,7 +34,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..core.config import EMPTY_CONFIG, ModelConfig
-from ..operators.checkpoint import LINEAGE_RUN, partition_metrics, resume_filter
+from ..functions.schemas import DOCUMENTS, MEDIA
+from ..operators.checkpoint import LINEAGE_RUN, partition_metrics, release, resume_filter
 from ..operators.observed import Observed
 from ..plans.extract_plan import TENANT, ExtractOptions, build_extract_plan
 from ..session import make_session  # noqa: F401  (perfbench imports it from here)
@@ -88,38 +93,36 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
     ``TableIO.appended``).  One SQL action without ``--checkpoint`` (the
     append), two with it (the append, then the metrics).
 
-    A ``--resume`` over an existing output first counts the documents
-    left (``docs_todo``, one more SQL action, doc_ids only and no UDF):
-    with none left it writes nothing and returns.  A delta that fits in
-    fewer tasks than ``defaultParallelism`` (``delta_tasks``) is
-    repartitioned to that many after the anti-join and the results are
-    coalesced to it, so the UDF starts that many Python workers and the
-    append writes that many files, while the scans keep their tasks.
+    A ``--resume`` over an existing output first anti-joins the input
+    against the done set in one more SQL action, an eager
+    ``localCheckpoint`` of the first ``docs_per_task`` + 1 documents left
+    (their ``doc_id`` and ``spans``, and the tenant) that counts the
+    rows it reads as ``docs_todo``.  With none left it writes nothing
+    and returns.  A delta of at most ``docs_per_task`` documents is all
+    in that checkpoint: the plan reads it in one task, so the append
+    scans neither the input nor the done set, and its blocks are
+    released after the append.  A larger delta is counted (one more SQL
+    action, doc_ids only) and the plan anti-joins the input itself, so
+    what a resume stores stays one task's input, whatever the delta.
+    While it fits in fewer tasks than ``defaultParallelism``
+    (``delta_tasks``) it is repartitioned to that many after the
+    anti-join and the results are coalesced to it, so the UDF starts
+    that many Python workers and the append writes that many files,
+    while the scans keep their tasks.
 
     With ``--tenants`` and a ``--tenant-column`` in the input, each
     document extracts under its tenant's config (an unknown or null
     tenant under the default) and every result row carries the tenant in
     ``_tenant_id``."""
     io = TableIO(spark)
-    docs = io.read(args.input)
-    media = io.read_if_exists(args.media) if args.media else None
+    tenants = [t.strip() for t in (args.tenants or "").split(",") if t.strip()]
+    # the declared schemas need no inference job (for a JSON input, no
+    # extra scan); --tenants reads the input's own columns, because
+    # whether it holds the tenant column decides the plan
+    docs = io.read(args.input, None if tenants else DOCUMENTS)
+    media = io.read_if_exists(args.media, MEDIA) if args.media else None
     config = ModelConfig.load(args.config) if args.config else EMPTY_CONFIG
 
-    resume = args.resume and io.exists(args.output)
-    done = io.read(args.output, "doc_id string") if resume else None
-    todo, tasks = {}, None
-    if done is not None:
-        todo["docs_todo"] = resume_filter(docs.select("doc_id"), done).count()
-        if todo["docs_todo"] == 0:
-            return {"run_id": args.run_id, **todo, "docs_written": 0}
-        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-        tasks = delta_tasks(todo["docs_todo"], batch, spark.sparkContext.defaultParallelism)
-    if tasks:
-        # the shuffle ends the scan's stage: the scan and the anti-join
-        # keep their parallelism, and only the delta's rows move
-        docs, done = resume_filter(docs, done).repartition(tasks), None
-
-    tenants = [t.strip() for t in (args.tenants or "").split(",") if t.strip()]
     tenant_configs = {}
     if tenants and args.tenant_column in docs.columns:
         docs = docs.withColumnRenamed(args.tenant_column, TENANT)
@@ -146,6 +149,34 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         include_full_text=args.include_full_text,
         run_id=args.run_id,
     )
+    resume = args.resume and io.exists(args.output)
+    done = io.read(args.output, "doc_id string") if resume else None
+    todo, tasks, kept = {}, None, None
+    if done is not None:
+        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        one_task = docs_per_task(batch)
+        # the first action keeps at most one task's documents left: all
+        # of a delta that small, which the plan then reads instead of
+        # the input.  docs_todo counts what the limit read: the whole
+        # delta when it is that small, more than one task's when not
+        columns = ["doc_id", "spans", *([TENANT] if tenant_configs else [])]
+        found = Observed.rows(resume_filter(docs.select(*columns), done), "docs_todo")
+        kept = found.df.limit(one_task + 1).localCheckpoint()
+        todo = found.values
+        if todo["docs_todo"] == 0:
+            release(kept)
+            return {"run_id": args.run_id, **todo, "docs_written": 0}
+        if todo["docs_todo"] <= one_task:
+            # one partition, declared: the plan adds no shuffle of its own
+            docs, done, tasks = kept.coalesce(1), None, 1
+        else:
+            todo["docs_todo"] = resume_filter(docs.select("doc_id"), done).count()
+            tasks = delta_tasks(todo["docs_todo"], batch, spark.sparkContext.defaultParallelism)
+    if tasks and done is not None:
+        # the shuffle ends the scan's stage: the scan and the anti-join
+        # keep their parallelism, and only the delta's rows move
+        docs, done = resume_filter(docs, done).repartition(tasks), None
+
     results = build_extract_plan(docs, media, options=options, done=done)
     if tasks:
         # merges the wide branch's post-shuffle partitions too
@@ -166,6 +197,8 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
         io.append(metrics.coalesce(1), args.checkpoint)
     else:
         io.append(appended.df, args.output)
+    if kept is not None:
+        release(kept)
 
     return {"run_id": args.run_id, **todo, **appended.values}
 
@@ -177,18 +210,22 @@ def run(args: argparse.Namespace, spark: SparkSession) -> dict:
 DELTA_DOCS_PER_TASK = 512
 
 
+def docs_per_task(batch: int) -> int:
+    """The documents one task of a resume extracts: ``DELTA_DOCS_PER_TASK``,
+    or the Arrow ``batch`` (``maxRecordsPerBatch``; ≤ 0 means no limit)
+    if that is smaller."""
+    return min(batch, DELTA_DOCS_PER_TASK) if batch > 0 else DELTA_DOCS_PER_TASK
+
+
 def delta_tasks(n_todo: int, batch: int, parallelism: int) -> int | None:
     """How many tasks extract a resume's ``n_todo`` documents: one per
-    ``DELTA_DOCS_PER_TASK`` docs, or per Arrow ``batch``
-    (``maxRecordsPerBatch``; ≤ 0 means no limit) if that is smaller,
-    while that is fewer than ``parallelism``; else None, the plan as
-    built.  0: nothing to extract.
+    ``docs_per_task(batch)``, while that is fewer than ``parallelism``;
+    else None, the plan as built.  0: nothing to extract.
 
     A task holding less than that still costs a whole Python worker
     (~120 MB resident, plus its start-up CPU) and an output file; a task
     holding more runs longer than the spread plan would."""
-    per_task = min(batch, DELTA_DOCS_PER_TASK) if batch > 0 else DELTA_DOCS_PER_TASK
-    n_tasks = -(-n_todo // per_task)
+    n_tasks = -(-n_todo // docs_per_task(batch))
     return n_tasks if n_tasks < parallelism else None
 
 

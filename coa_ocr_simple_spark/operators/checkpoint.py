@@ -12,10 +12,14 @@ Resumability model for a 10^12-doc run:
   the document level because each doc_id is processed exactly once per
   final table state (re-running a partially-completed run adds only the
   missing documents);
-- a resume counts those documents first (doc_ids only, no UDF): an empty
-  delta writes nothing to the output or the checkpoint, and a small one
-  is extracted in fewer tasks, so it appends fewer files
-  (``jobs.extract.delta_tasks``).
+- a resume first keeps at most one task's worth of those documents,
+  with one eager ``localCheckpoint`` that scans the input and the done
+  set.  An empty delta writes nothing to the output or the checkpoint; a
+  delta that small is extracted from the checkpoint, not the input; a
+  larger one is counted and, while small, extracted in fewer tasks, so
+  it appends fewer files (``jobs.extract.delta_tasks``).  ``release``
+  frees the kept documents' blocks after the append: ``unpersist()``
+  does not.
 
 With an Iceberg catalog the append is snapshot-isolated; with the Parquet
 fallback the job-level output committer gives all-or-nothing per write.
@@ -49,6 +53,18 @@ def resume_filter(docs: DataFrame, done: DataFrame | None) -> DataFrame:
     if done is None:
         return docs
     return docs.join(done.select("doc_id"), on="doc_id", how="left_anti")
+
+
+def release(df: DataFrame) -> None:
+    """Free the executor blocks of a persisted or a checkpointed frame.
+
+    ``DataFrame.unpersist()`` frees only a persisted frame.  A
+    ``localCheckpoint`` is a ``LogicalRDD`` over an RDD that holds the
+    blocks, and those stay until the driver garbage-collects the RDD."""
+    df.unpersist()
+    plan = df._jdf.logicalPlan()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(True)
 
 
 def partition_metrics(results_with_lineage: DataFrame, status: str = "ok") -> DataFrame:

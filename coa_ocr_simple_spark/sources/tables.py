@@ -126,5 +126,5 @@ class TableIO:
             return found
         return any(_is_data_file(name) for name in found)
 
-    def read_if_exists(self, identifier: str) -> DataFrame | None:
-        return self.read(identifier) if self.exists(identifier) else None
+    def read_if_exists(self, identifier: str, schema=None) -> DataFrame | None:
+        return self.read(identifier, schema) if self.exists(identifier) else None

@@ -867,6 +867,19 @@ def test_optional_stage_curate_run_action_budget(spark, tmp_path, job_and_action
     assert n_actions == 9, (n_jobs, n_actions)
 
 
+def test_curate_run_frees_its_lineage_cuts(spark, tmp_path, local_checkpoints):
+    """Two doc-set stages and two payload rewrites: every survivor set
+    and payload the run checkpointed is freed by the end of the run
+    (``unpersist()`` left each one in executor storage)."""
+    path = _corpus(tmp_path)
+    flags = ["--gopher-filter", "--entropy-filter", "--c4-clean", "--dedup-paragraphs"]
+    out = str(tmp_path / "o")
+    summary = run(parse_args(["--input", path, "--output", out] + flags), spark)
+    made, stored = local_checkpoints()
+    assert len(made) == 5 and stored == []  # the first cut, 2 stages, 2 rewrites
+    assert spark.read.parquet(out).count() == summary["n_after_paragraph_dedup"]
+
+
 def _write_docs(tmp_path, rows, name):
     schema = pa.schema(
         [("doc_id", pa.int64()), ("text", pa.string()), ("lang", pa.string()),

@@ -1,9 +1,10 @@
 """jobs.extract.run: its observed count, its action budget and its paths.
 
 ``docs_written`` is an observed metric of the append, so a run costs one
-SQL action, two with ``--checkpoint``; a resume counts what is left first
-(one more), writes nothing when that is 0 and extracts a small delta in
-fewer tasks.  ``--output`` and ``--media`` are looked up where Spark reads and writes them: a URI (``file:/``,
+SQL action, two with ``--checkpoint``; a resume first looks for what is
+left (one more, which keeps a delta of at most one task's documents for
+the extraction to read), writes nothing when that is 0 and extracts a
+small delta in fewer tasks.  ``--output`` and ``--media`` are looked up where Spark reads and writes them: a URI (``file:/``,
 ``hdfs://``, ``s3a://``) on its own filesystem, a path with no scheme on
 the session's default filesystem.  A resume must see the rows such an
 output already holds, and such a media store must resolve.
@@ -14,6 +15,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import re
 
 from types import SimpleNamespace
 
@@ -21,9 +23,11 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from coa_ocr_simple_spark.fixtures.generate import SpanBuilder, template_coa, write_corpus
+from coa_ocr_simple_spark.jobs import extract
 from coa_ocr_simple_spark.jobs.extract import (
     DELTA_DOCS_PER_TASK,
     delta_tasks,
+    docs_per_task,
     main,
     parse_args,
     run,
@@ -68,11 +72,14 @@ def test_main_prints_the_summary_as_json(spark, tmp_path, capsys):
     assert json.loads(capsys.readouterr().out) == {"run_id": "cli", "docs_written": N_DOCS}
 
 
-def test_all_done_resume_returns_zero(spark, tmp_path, job_and_action_counts):
+def test_all_done_resume_returns_zero(
+    spark, tmp_path, job_and_action_counts, local_checkpoints
+):
     """Resuming a finished output counts 0 documents to do and returns 0
     written.  It appends no empty file to the output or the checkpoint
-    (each resume ran the whole plan and added one of each), and costs
-    one SQL action, the count of what is left."""
+    (each resume ran the whole plan and added one of each), costs one
+    SQL action, the checkpoint of what is left, and frees that empty
+    checkpoint's blocks."""
     docs, media = _corpus(tmp_path)
     out, ckpt = tmp_path / "out", tmp_path / "ckpt"
     _extract(spark, docs, media, str(out), "--run-id", "r1", "--checkpoint", str(ckpt))
@@ -90,6 +97,8 @@ def test_all_done_resume_returns_zero(spark, tmp_path, job_and_action_counts):
         assert summary == {"run_id": "r2", "docs_todo": 0, "docs_written": 0}
         assert n_actions == 1
         assert (sorted(os.listdir(out)), sorted(os.listdir(ckpt))) == listings
+    made, stored = local_checkpoints()
+    assert len(made) == 3 and stored == []
     n_docs = spark.read.parquet(str(ckpt)).agg(F.sum("n_docs")).first()[0]
     assert n_docs == spark.read.parquet(str(out)).count() == N_DOCS
 
@@ -100,6 +109,7 @@ def test_delta_tasks_boundaries():
     parallelism; from there on the plan as built (None)."""
     batch, parallelism, d = 2048, 4, DELTA_DOCS_PER_TASK
     assert d < batch
+    assert docs_per_task(batch) == docs_per_task(0) == d and docs_per_task(16) == 16
     assert delta_tasks(0, batch, parallelism) == 0
     assert delta_tasks(1, batch, parallelism) == 1
     assert delta_tasks(d, batch, parallelism) == 1
@@ -143,13 +153,15 @@ def _find(node, name: str):
 
 
 def test_small_delta_runs_in_fewer_tasks(spark, tmp_path, monkeypatch):
-    """The same 16-doc resume on each side of the sizing rule: below it
-    the extraction is coalesced to ``k`` tasks and appends ``k`` files;
-    at ``parallelism × batch`` documents the plan is the one built, with
-    no ``Coalesce``.  The coalesced tasks read the delta from a shuffle:
-    no input or done-set scan runs inside them, so the scans keep one
-    task per input split.  Both sides write the same rows (their
-    ``_partition_id`` numbers their own UDF input partitions)."""
+    """The same 16-doc resume at three Arrow batch sizes.  In one task's
+    documents, the extraction reads the delta the first action kept and
+    appends one file.  Below the sizing rule it is coalesced to ``k``
+    tasks and appends ``k`` files; at ``parallelism × batch`` documents
+    the plan is the one built, with no ``Coalesce``.  The coalesced tasks
+    read the delta from the checkpoint or from a shuffle: no input or
+    done-set scan runs inside them, so the scans keep one task per input
+    split.  All sides write the same rows (their ``_partition_id``
+    numbers their own UDF input partitions)."""
     docs, media = _corpus(tmp_path)
     prefix = _prefix(spark, tmp_path, docs)
     n_todo, parallelism = N_DOCS - 24, spark.sparkContext.defaultParallelism
@@ -176,7 +188,11 @@ def test_small_delta_runs_in_fewer_tasks(spark, tmp_path, monkeypatch):
         assert summary["docs_todo"] == summary["docs_written"] == n_todo
         return {f for f in set(os.listdir(out)) - before if f.startswith("part-")}
 
-    small, large = str(tmp_path / "small"), str(tmp_path / "large")
+    one, small, large = str(tmp_path / "one"), str(tmp_path / "small"), str(tmp_path / "large")
+    assert len(_resume(one, n_todo)) == 1
+    coalesce = _find(plans[0], "CoalesceExec")
+    assert coalesce is not None and coalesce.numPartitions() == 1
+    assert _scans_without_exchange(coalesce) == 0, coalesce.toString()
     k = 2
     assert delta_tasks(n_todo, n_todo // k, parallelism) == k
     assert len(_resume(small, n_todo // k)) == k
@@ -191,7 +207,51 @@ def test_small_delta_runs_in_fewer_tasks(spark, tmp_path, monkeypatch):
         df = spark.read.parquet(path).drop("_partition_id")
         return {r["doc_id"]: r for r in df.collect()}
 
-    assert rows(small) == rows(large)
+    assert rows(one) == rows(small) == rows(large)
+
+
+def test_a_delta_in_one_split_spreads_over_its_tasks(
+    spark, tmp_path, monkeypatch, local_checkpoints
+):
+    """A 10-doc delta that is all of one of the input's four files, sized
+    to ``k`` = 2 tasks of 5: the round-robin shuffle gives each task half
+    of it, so the append writes two files of 5 rows.  Merging the input's
+    partitions instead would leave the whole delta in one task.  The
+    first action kept 6 of the 10 documents, one task's and one more,
+    and freed them."""
+    docs, media = _corpus(tmp_path)
+    split = str(tmp_path / "docs_split.parquet")
+    ids = F.substring("doc_id", 5, 8).cast("int")
+    for lo in range(0, N_DOCS, 10):
+        part = spark.read.parquet(docs).where((ids >= lo) & (ids < lo + 10))
+        part.coalesce(1).write.mode("append").parquet(split)
+    out = str(tmp_path / "out")
+    prefix = spark.read.parquet(docs).where(ids < N_DOCS - 10)
+    prefix.write.parquet(str(tmp_path / "done.parquet"))
+    _extract(spark, str(tmp_path / "done.parquet"), media, out, "--run-id", "r1")
+    before = set(os.listdir(out))
+    kept, release = [], extract.release
+
+    def _release(df):
+        kept.append(df.count())
+        release(df)
+
+    monkeypatch.setattr(extract, "release", _release)
+    batch, parallelism = 5, spark.sparkContext.defaultParallelism
+    assert delta_tasks(10, batch, parallelism) == 2
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, str(batch))
+    try:
+        summary = _extract(spark, split, media, out, "--run-id", "r2", "--resume")
+    finally:
+        spark.conf.set(conf, saved)
+    assert summary["docs_todo"] == summary["docs_written"] == 10
+    new = sorted(f for f in set(os.listdir(out)) - before if f.startswith("part-"))
+    counts = [spark.read.parquet(os.path.join(out, f)).count() for f in new]
+    assert counts == [5, 5], counts
+    made, stored = local_checkpoints()
+    assert kept == [batch + 1] and len(made) == 1 and stored == []
 
 
 def test_reused_run_id_counts_only_this_invocation(spark, tmp_path):
@@ -204,14 +264,17 @@ def test_reused_run_id_counts_only_this_invocation(spark, tmp_path):
 
 
 def test_extract_run_action_budget(spark, tmp_path, job_and_action_counts):
-    """A ``--resume --checkpoint`` run is three SQL actions (the count of
-    what is left, the append, the checkpoint metrics); a run without
-    ``--checkpoint`` or ``--resume`` is one.  Measured on this corpus,
-    the resume run is 12 Spark jobs and 3 actions: the count is 3 jobs
-    and the small delta's shuffle 1.  It was 8 jobs and 2 actions before
-    it counted its delta first, and 11 jobs and 2 actions before that, when the done set was read with an inferred schema and
-    deduplicated (its own shuffle map stage) and the checkpoint re-read
-    the output with an inferred schema."""
+    """A ``--resume --checkpoint`` run is three SQL actions (the eager
+    checkpoint of what is left, the append, the checkpoint metrics); a
+    run without ``--checkpoint`` or ``--resume`` is one.  Measured on
+    this corpus, the resume run is 6 Spark jobs and 3 actions.  It was 12
+    jobs and 3 actions when it counted its delta (3 jobs), anti-joined
+    the input again in the plan and shuffled a small delta (1 job), and
+    read the input and the media with inferred schemas (1 job each); 8
+    jobs and 2 actions before it counted its delta, and 11 jobs and 2
+    actions before that, when the done set was read with an inferred
+    schema and deduplicated (its own shuffle map stage) and the
+    checkpoint re-read the output with an inferred schema."""
     docs, media = _corpus(tmp_path)
     out = str(tmp_path / "out")
     _, n_actions = job_and_action_counts(
@@ -223,10 +286,63 @@ def test_extract_run_action_budget(spark, tmp_path, job_and_action_counts):
     n_jobs, n_actions = job_and_action_counts(
         lambda: summary.update(_extract(spark, docs, media, out, *flags))
     )
-    assert (n_jobs, n_actions) == (12, 3)
+    assert (n_jobs, n_actions) == (6, 3)
     assert summary["docs_todo"] == summary["docs_written"] == N_DOCS - 24
     ckpt = spark.read.parquet(str(tmp_path / "ckpt"))
     assert ckpt.agg(F.sum("n_docs")).first()[0] == N_DOCS - 24
+
+
+def _file_scans(node) -> set[str]:
+    """Root paths of the file scans in physical plan ``node``."""
+    if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        node = node.initialPlan()
+    found = set()
+    if node.getClass().getSimpleName() == "FileSourceScanExec":
+        roots = node.relation().location().rootPaths()
+        found = {roots.apply(i).toUri().getPath() for i in range(roots.size())}
+    children = node.children()
+    return found.union(*(_file_scans(children.apply(i)) for i in range(children.size())))
+
+
+def test_resume_scans_input_and_done_set_once(
+    spark, tmp_path, monkeypatch, local_checkpoints, sql_executions
+):
+    """A ``--resume --checkpoint`` run scans the input and the done set
+    in one SQL execution, the checkpoint of the delta; the append reads
+    the delta from that checkpoint and scans neither of them again.  The
+    run frees the checkpoint's blocks, and a fresh run makes none."""
+    docs, media = _corpus(tmp_path)
+    out = str(tmp_path / "out")
+    _extract(spark, _prefix(spark, tmp_path, docs), media, out, "--run-id", "r1")
+    assert local_checkpoints() == ([], [])
+    plans = []
+    append = TableIO.append
+
+    def _append(self, df, identifier):
+        append(self, df, identifier)
+        plans.append(df._jdf.queryExecution().executedPlan())
+
+    monkeypatch.setattr(TableIO, "append", _append)
+    flags = ["--run-id", "r2", "--resume", "--checkpoint", str(tmp_path / "ckpt")]
+    summary = {}
+    runs = sql_executions(lambda: summary.update(_extract(spark, docs, media, out, *flags)))
+    assert len(runs) == 3
+    scans = [
+        {
+            path.split("file:", 1)[-1]
+            for located in re.findall(r"Location: \w+ \[([^\]]*)\]", run.physicalPlanDescription())
+            for path in located.split(", ")
+        }
+        for run in runs
+    ]
+    assert sum(docs in s for s in scans) == 1, scans
+    assert sum(out in s for s in scans) == 1, scans
+    assert [s for s in scans if docs in s] == [s for s in scans if out in s]
+    assert summary["docs_todo"] == summary["docs_written"] == N_DOCS - 24
+    assert not _file_scans(plans[0]) & {docs, out}
+    assert media in _file_scans(plans[0])
+    made, stored = local_checkpoints()
+    assert len(made) == 1 and stored == []
 
 
 def test_checkpoint_counts_only_this_invocation(spark, tmp_path):
